@@ -2,7 +2,7 @@ package graft.algos
 
 import graft.graph.PropertyGraph
 import graft.impl.Pin
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftx.BloomBridge
 import org.apache.spark.sql.types._
@@ -13,6 +13,28 @@ import org.apache.spark.sql.types._
   * plans like any other, and intermediate state is pinned via [[graft.impl.Pin]]
   * (lazy localCheckpoint locally, fault-tolerant persist on a cluster) to
   * truncate lineage — the standard scale pattern for iterative Spark.
+  *
+  * Round helpers. The loops share one superstep shape (Pregelix's join +
+  * group-by over a vertex relation and a message relation), written once
+  * in the private helpers below ([[rankRounds]], [[bfsLevels]],
+  * [[closedWedges]], [[hllHop]], [[untilConverged]]). Their invariants:
+  *   - Fact frames (edges, links, canonical pairs) are pinned ONCE with
+  *     [[graft.impl.Pin.keyed]]: the hash layout stays visible through the
+  *     pin, so no round re-exchanges them.
+  *   - Each round pins exactly one frame, lazily. The round's other views
+  *     (ranks, frontier, distances) are cheap projections of that pin, so
+  *     they re-read its cached blocks instead of writing more block sets,
+  *     and lineage stays flat.
+  *   - A round's only driver job is a 1-row aggregate over the pinned frame
+  *     (mass total, norm, count, changed count): the scalar fold doubles as
+  *     the pin's materialization. A loop with no scalar runs no job per
+  *     round.
+  *   - Per-round joins hint `shuffle_hash` on the small per-round side, so
+  *     the pinned fact frame is never sorted (the pin keeps partitioning,
+  *     not order).
+  *   - A loop that can stop early runs under [[untilConverged]], which
+  *     THROWS at its cap: a truncated fixpoint (mid-contraction labels,
+  *     unfinalized distances, a superset of a core) is never returned.
   *
   * Referential integrity: the iterative algorithms derive their working node
   * set from edge endpoints, assuming rel endpoints are a subset of node ids
@@ -28,19 +50,24 @@ object GraphAlgorithms {
     graph.relScansFor(relTypes).map(_.df.select(
         col(PropertyGraph.SRC).as("src"), col(PropertyGraph.TGT).as("dst")))
       .reduceOption(_.unionByName(_))
-      .getOrElse { // no rel table of the requested types: empty edge frame
-        val spark = graph.nodeTables.head.df.sparkSession
-        spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          StructType(Seq(StructField("src", LongType), StructField("dst", LongType))))
-      }
+      .getOrElse(emptyFrame(graph, srcDst))
 
   def nodeIds(graph: PropertyGraph): DataFrame = graph.nodeIdFrame
+
+  private val srcDst = Seq(StructField("src", LongType), StructField("dst", LongType))
+
+  /** An empty frame for a graph with no rel table of the requested types. */
+  private def emptyFrame(graph: PropertyGraph, fields: Seq[StructField]): DataFrame = {
+    val spark = graph.nodeTables.head.df.sparkSession
+    spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+      StructType(fields))
+  }
 
   /** Opt-in edge validation for graphs without guaranteed referential
     * integrity: drops edges whose endpoints are missing from the node
     * tables, so the iterative algorithms' edge-derived node sets stay a
-    * subset of node ids (and pageRank's mass normalization stays aligned
-    * with its rank row set). */
+    * subset of node ids (and the rank loops' mass normalization stays
+    * aligned with their rank row set). Other columns (weights) ride along. */
   private def validated(e: DataFrame, graph: PropertyGraph): DataFrame = {
     val validate = e.sparkSession.conf
       .getOption("spark.graft.algo.validateNodeIds").exists(_.toBoolean)
@@ -49,8 +76,63 @@ object GraphAlgorithms {
       val ids = nodeIds(graph)
       e.join(ids.select(col("id").as("src")), Seq("src"), "left_semi")
         .join(ids.select(col("id").as("dst")), Seq("dst"), "left_semi")
-        .select(col("src"), col("dst"))
+        .select(e.columns.map(col): _*)
     }
+  }
+
+  /** Validated (src, dst, w) edges: every edge of a rel type named in
+    * `weights` carries that type's weight; other types are not traversed. */
+  private def weightedEdges(graph: PropertyGraph,
+      weights: Map[String, Double]): DataFrame = {
+    require(weights.nonEmpty, "weights must name >= 1 relationship type")
+    require(weights.values.forall(_ > 0), s"weights must be positive: $weights")
+    val typed = weights.toSeq.flatMap { case (t, w) =>
+      graph.relScansFor(Seq(t)).map(_.df.select(
+        col(PropertyGraph.SRC).as("src"), col(PropertyGraph.TGT).as("dst"),
+        lit(w).as("w")))
+    }.reduceOption(_.unionByName(_))
+      .getOrElse(emptyFrame(graph, srcDst :+ StructField("w", DoubleType)))
+    validated(typed, graph)
+  }
+
+  /** `e` plus every edge reversed (other columns ride along), unless
+    * `directed`. */
+  private def symmetrized(e: DataFrame, directed: Boolean): DataFrame =
+    if (directed) e
+    else e.unionByName(e.select(e.columns.map {
+      case "src" => col("dst").as("src")
+      case "dst" => col("src").as("dst")
+      case c => col(c)
+    }: _*))
+
+  /** Both endpoints of every (src, dst) edge as an `id` column, repeats kept. */
+  private def endpointIds(e: DataFrame): DataFrame =
+    e.select(col("src").as("id")).unionByName(e.select(col("dst").as("id")))
+
+  /** The distinct endpoint set, pinned hash(id). Edge endpoints ARE node
+    * ids, so this is the connected-node set without a semi-join against the
+    * node table, and the per-round joins onto it consume the hash(id) layout. */
+  private def connectedIds(e: DataFrame): DataFrame =
+    Pin.keyed(endpointIds(e), Seq("id"), _.distinct())
+
+  /** `scored` (id, value) plus every node it lacks at value `fill`: the
+    * closed-form rows of nodes the loop never iterated. Lazy — the caller's
+    * action reads the pinned frames, no extra pass here. */
+  private def withIsolated(graph: PropertyGraph, scored: DataFrame,
+      fill: Column): DataFrame =
+    scored.unionByName(nodeIds(graph)
+      .join(scored.select(col("id")), Seq("id"), "left_anti")
+      .select(col("id"), fill.as(scored.columns(1))))
+
+  /** Runs `round(1)`, `round(2)`, ... until one returns true (converged);
+    * throws IllegalStateException(`failMsg`) when `max` rounds do not get
+    * there. */
+  private def untilConverged(max: Int, failMsg: => String)(
+      round: Int => Boolean): Unit = {
+    var i = 0
+    var done = false
+    while (!done && i < max) { i += 1; done = round(i) }
+    if (!done) throw new IllegalStateException(failMsg)
   }
 
   /** In/out/total degree per node id. Single pass over the edge frame:
@@ -87,58 +169,10 @@ object GraphAlgorithms {
     * shrinks every per-round join and checkpoint by the isolated fraction. */
   def pageRank(graph: PropertyGraph, iterations: Int = 10,
       damping: Double = 0.85, relTypes: Seq[String] = Seq.empty): DataFrame = {
-    // All intermediate state is pinned lazily (Pin: localCheckpoint locally,
-    // persist on a cluster): lineage is cut immediately (bounded plans across
-    // rounds), blocks are materialized by the next action that reads them.
     val n = nodeIds(graph).count()
-    // One src exchange feeds the degree aggregation AND the links join on
-    // both sides (r14, guide §2.4) — the old shape shuffled the edge frame
-    // twice (groupBy input + join left).
     val e = validated(edges(graph, relTypes), graph)
-    // Pin.keyed (r15): ONE explicit hash(src) exchange feeds the degree
-    // aggregation AND both join sides (the r14 single-exchange shape,
-    // via ReuseExchange on the shared subtree), and the layout claim
-    // survives the pin so no round re-exchanges links (the plain pin lost
-    // the metadata — UnknownPartitioning — and re-shuffled it every
-    // round; at 100 TB that re-shuffle would dominate).
-    val links = Pin.keyed(e, Seq("src"), ep =>
-      ep.join(ep.groupBy(col("src")).agg(count(lit(1)).as("deg")), "src"))
-    // Edge endpoints ARE node ids, so the distinct endpoint set IS the
-    // connected-node set — no semi-join against the full node table. The
-    // distinct rides Pin.keyed's hash(id) exchange, which the loop's
-    // per-round contribution joins then consume for free (r15).
-    val connected = Pin.keyed(e.select(col("src").as("id"))
-      .unionByName(e.select(col("dst").as("id"))), Seq("id"), _.distinct())
-    var isoRank = 1.0
-    var ranks = connected.select(col("id"), lit(1.0).as("rank"))
-    for (i <- 1 to iterations) {
-      val contribs = rankContribs(links, ranks)
-      // `received` is read twice (mass total + rank update): the lazy
-      // checkpoint is materialized by the 1-row mass aggregate — ONE job
-      // per round (an eager checkpoint + separate aggregate was two; the
-      // per-job overhead dominated the whole algorithm).
-      val received = Pin(connected.join(contribs, Seq("id"), "left_outer")
-        .select(col("id"), coalesce(col("contrib"), lit(0.0)).as("contrib")))
-      // Total link-transferred mass; the rest (dangling + isolated mass)
-      // is spread uniformly.
-      val tc = received.agg(coalesce(sum("contrib"), lit(0.0))).head().getDouble(0)
-      val missShare = (n - tc) / n
-      // ranks is a cheap projection of the pinned `received`: deriving it
-      // lazily re-reads those cached blocks instead of writing a second
-      // block set per round (same one-pin-per-round rule as sssp, which
-      // measured ~33% faster for it). Lineage stays flat — the chain
-      // roots at this round's pinned frame.
-      ranks = received.select(col("id"),
-        (lit(1.0 - damping) +
-          lit(damping) * (col("contrib") + lit(missShare))).as("rank"))
-      isoRank = (1.0 - damping) + damping * missShare
-    }
-    // Isolated nodes receive no link mass, so their rank is the closed-form
-    // scalar of the last round; returned lazily — the caller's action reads
-    // the checkpointed ranks, no extra materialization pass here.
-    val isolated = nodeIds(graph).join(ranks.select(col("id")), Seq("id"), "left_anti")
-      .select(col("id"), lit(isoRank).as("rank"))
-    ranks.unionByName(isolated)
+    conservedRank(graph, n, normLinks(e, count(lit(1)).as("deg")),
+      connectedIds(e), col("rank") / col("deg"), iterations, damping)
   }
 
   /** Weighted PageRank: link mass flows proportionally to edge weight
@@ -146,65 +180,74 @@ object GraphAlgorithms {
     * relationshipWeightProperty variant, with weights named per
     * relationship type (the CALL-args-are-literals convention this
     * engine's sssp also uses). Per-source weight shares sum to 1, so
-    * the mass-conservation / dangling-share algebra is [[pageRank]]'s
-    * verbatim; the scale shape (links pinned pre-partitioned on src, ONE
-    * job per round via the lazy pin + mass aggregate, isolated nodes
-    * closed-form) is identical. */
+    * the mass-conservation / dangling-share algebra and the scale shape
+    * are [[pageRank]]'s verbatim. */
   def pageRankWeighted(graph: PropertyGraph, weights: Map[String, Double],
       iterations: Int = 10, damping: Double = 0.85): DataFrame = {
-    require(weights.nonEmpty, "weights must name >= 1 relationship type")
-    require(weights.values.forall(_ > 0), s"weights must be positive: $weights")
-    val spark = nodeIds(graph).sparkSession
+    val typed = weightedEdges(graph, weights)
     val n = nodeIds(graph).count()
-    val typed = weights.toSeq.flatMap { case (t, w) =>
-      graph.relScansFor(Seq(t)).map(_.df.select(
-        col(PropertyGraph.SRC).as("src"), col(PropertyGraph.TGT).as("dst"),
-        lit(w).as("w")))
-    }.reduceOption(_.unionByName(_)).getOrElse(
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        StructType(Seq(StructField("src", LongType), StructField("dst", LongType),
-          StructField("w", DoubleType)))))
-    // Same single-exchange links construction as pageRank (r14).
-    // Pin.keyed (r15): one explicit hash(src) exchange feeds the weight
-    // aggregation and both join sides, and the layout claim survives the
-    // pin so no round re-exchanges links (see pageRank).
-    val links = Pin.keyed(typed, Seq("src"), tp =>
-      tp.join(tp.groupBy(col("src")).agg(sum(col("w")).as("outw")), "src"))
-    val connected = Pin.keyed(typed.select(col("src").as("id"))
-      .unionByName(typed.select(col("dst").as("id"))), Seq("id"), _.distinct())
-    var isoRank = 1.0
-    var ranks = connected.select(col("id"), lit(1.0).as("rank"))
-    for (_ <- 1 to iterations) {
-      val contribs = links.join(ranks.hint("shuffle_hash"),
-          links("src") === ranks("id"))
-        .select(col("dst").as("id"),
-          (col("rank") * col("w") / col("outw")).as("c"))
-        .groupBy(col("id")).agg(sum(col("c")).as("contrib"))
-      val received = Pin(connected.join(contribs, Seq("id"), "left_outer")
-        .select(col("id"), coalesce(col("contrib"), lit(0.0)).as("contrib")))
-      val tc = received.agg(coalesce(sum("contrib"), lit(0.0))).head().getDouble(0)
-      val missShare = (n - tc) / n
-      ranks = received.select(col("id"),
-        (lit(1.0 - damping) +
-          lit(damping) * (col("contrib") + lit(missShare))).as("rank"))
-      isoRank = (1.0 - damping) + damping * missShare
-    }
-    val isolated = nodeIds(graph).join(ranks.select(col("id")), Seq("id"), "left_anti")
-      .select(col("id"), lit(isoRank).as("rank"))
-    ranks.unionByName(isolated)
+    conservedRank(graph, n, normLinks(typed, sum(col("w")).as("outw")),
+      connectedIds(typed), col("rank") * col("w") / col("outw"),
+      iterations, damping)
   }
 
-  /** One damped-rank round's link-mass transfer: degree-normalized rank
-    * flows along the pinned (src-partitioned) links and aggregates per
-    * destination. Factored so AlgosSpec can assert the scale property —
-    * the round consumes the pinned hash(src) partitioning and never
-    * re-shuffles the edge side (shared by [[pageRank]] and
-    * [[personalizedPageRank]]). */
-  private[graft] def rankContribs(links: DataFrame, ranks: DataFrame): DataFrame =
-    // shuffle_hash on the rank side: links is the pinned fact frame and a
-    // sort-merge join would re-sort it every round (r14, guide §3.1).
+  /** The [[pageRank]] recurrence over any links frame: ranks sum to `n`;
+    * the mass links did not transfer (dangling + isolated) is spread
+    * uniformly, and isolated nodes get the last round's closed-form rank. */
+  private def conservedRank(graph: PropertyGraph, n: Long, links: DataFrame,
+      connected: DataFrame, share: Column, iterations: Int,
+      damping: Double): DataFrame = {
+    var isoRank = 1.0
+    val ranks = rankRounds(links, connected,
+        connected.select(col("id"), lit(1.0).as("rank")), iterations, share,
+        Some(sum(col("contrib")))) { (received, tc) =>
+      val missShare = (n - tc) / n
+      isoRank = (1.0 - damping) + damping * missShare
+      received.select(col("id"),
+        (lit(1.0 - damping) +
+          lit(damping) * (col("contrib") + lit(missShare))).as("rank"))
+    }
+    withIsolated(graph, ranks, lit(isoRank))
+  }
+
+  /** Edges pinned hash(src) with a per-source normalizer column (`norm`):
+    * one explicit exchange feeds the normalizer aggregate AND both join
+    * sides (ReuseExchange on the shared subtree), and the claim survives
+    * the pin so no round re-exchanges the links. */
+  private def normLinks(e: DataFrame, norm: Column): DataFrame =
+    Pin.keyed(e, Seq("src"), ep => ep.join(ep.groupBy(col("src")).agg(norm), "src"))
+
+  /** The damped-rank / power-iteration loop. Per round: `share` (over the
+    * links and ranks columns) flows along the pinned hash(src) `links` and
+    * sums per destination ([[rankContribs]]); the sum is left-outer joined
+    * onto the keyed `working` set as `contrib` (0 when nothing arrives) and
+    * pinned. `scalar`, if given, is the round's 1-row aggregate over that
+    * pin (null reads 0); `next` maps the pinned frame and the scalar to the
+    * next ranks. */
+  private def rankRounds(links: DataFrame, working: DataFrame,
+      init: DataFrame, iterations: Int, share: Column, scalar: Option[Column])(
+      next: (DataFrame, Double) => DataFrame): DataFrame = {
+    var ranks = init
+    for (_ <- 1 to iterations) {
+      val received = Pin(working
+        .join(rankContribs(links, ranks, share), Seq("id"), "left_outer")
+        .select(working.columns.map(col) :+
+          coalesce(col("contrib"), lit(0.0)).as("contrib"): _*))
+      val s = scalar.fold(0.0)(agg =>
+        received.agg(coalesce(agg, lit(0.0))).head().getDouble(0))
+      ranks = next(received, s)
+    }
+    ranks
+  }
+
+  /** One rank round's link-mass transfer: `share` (degree-normalized rank
+    * by default) flows along the pinned hash(src) links and aggregates per
+    * destination. Package-private so the shape tests can assert the round
+    * consumes the pinned partitioning and never re-shuffles the edge side. */
+  private[graft] def rankContribs(links: DataFrame, ranks: DataFrame,
+      share: Column = col("rank") / col("deg")): DataFrame =
     links.join(ranks.hint("shuffle_hash"), links("src") === ranks("id"))
-      .select(col("dst").as("id"), (col("rank") / col("deg")).as("c"))
+      .select(col("dst").as("id"), share.as("c"))
       .groupBy(col("id")).agg(sum(col("c")).as("contrib"))
 
   /** Connected components (undirected) by alternating large-star /
@@ -218,19 +261,13 @@ object GraphAlgorithms {
     * ~20 rounds because both star operations halve every node's distance
     * to its component minimum. Each round is two keyed join+aggregation
     * passes over the (monotonically star-contracting) edge frame, pinned
-    * per round. If the fixpoint is not reached inside `maxIterations` the
-    * call THROWS instead of returning mid-contraction labels (the fixpoint
-    * rule every graft loop follows — a silently wrong component assignment
-    * at 100 TB is strictly worse than a classified failure). */
+    * per round. */
   def connectedComponents(graph: PropertyGraph,
       relTypes: Seq[String] = Seq.empty, maxIterations: Int = 20): DataFrame = {
-    val e0 = validated(edges(graph, relTypes), graph)
-    val comp = ccStarLabels(e0, maxIterations)
-    // Isolated singletons (incl. self-loop-only nodes) appended lazily; the
-    // caller's action reads the pinned comp frame — no extra pass here.
-    val isolated = nodeIds(graph).join(comp.select(col("id")), Seq("id"), "left_anti")
-      .select(col("id"), col("id").as("component"))
-    comp.unionByName(isolated)
+    // Isolated singletons (incl. self-loop-only nodes) label themselves.
+    withIsolated(graph,
+      ccStarLabels(validated(edges(graph, relTypes), graph), maxIterations),
+      col("id"))
   }
 
   /** The star-contraction core of [[connectedComponents]] over an arbitrary
@@ -255,9 +292,9 @@ object GraphAlgorithms {
         least(col("src"), col("dst")).as("v"))
       .distinct())
     var curN = cur.count()
-    var converged = curN == 0
-    var it = 0
-    while (!converged && it < maxIterations) {
+    if (curN > 0) untilConverged(maxIterations,
+        s"connectedComponents did not converge within $maxIterations " +
+          "star-contraction rounds (raise maxIterations)") { _ =>
       // large-star over symmetrized neighborhoods
       val sym = cur.unionByName(cur.select(col("v").as("u"), col("u").as("v")))
       val lsMin = sym.groupBy(col("u")).agg(min(col("v")).as("mv"))
@@ -285,16 +322,13 @@ object GraphAlgorithms {
       // counts agree — the count itself doubles as next's pin
       // materialization action.
       val nextN = next.count()
-      converged = nextN == curN && next.unionByName(cur)
+      val converged = nextN == curN && next.unionByName(cur)
         .groupBy(col("u"), col("v")).agg(count(lit(1)).as("c"))
         .filter(col("c") === 1).isEmpty
       cur = next
       curN = nextN
-      it += 1
+      converged
     }
-    if (!converged) throw new IllegalStateException(
-      s"connectedComponents did not converge within $maxIterations " +
-        "star-contraction rounds (raise maxIterations)")
     // Fixpoint edges are the star forest: children point at the component
     // minimum; the minima themselves appear only on the parent side. The
     // min-aggregation is a correctness belt: it collapses any duplicate
@@ -309,6 +343,29 @@ object GraphAlgorithms {
       relTypes: Seq[String] = Seq.empty): Long =
     triangleCountEdges(edges(graph, relTypes)).head().getLong(0)
 
+  /** Loop-free undirected pairs as (a, b) with a < b, duplicates kept. */
+  private def canonPairs(edges0: DataFrame): DataFrame =
+    edges0.filter(col("src") =!= col("dst"))
+      .select(least(col("src"), col("dst")).as("a"),
+        greatest(col("src"), col("dst")).as("b"))
+
+  /** The canonical undirected edge set: [[canonPairs]] deduped, pinned
+    * hash(a). The dedup rides the hash(a) repartition (one exchange, not
+    * two), and the visible hash(a) layout feeds [[orientByDegree]]'s a-side
+    * join, the closing semi-join's (a, b) clustering and the bloom build. */
+  private def canonEdges(edges0: DataFrame): DataFrame =
+    Pin.keyed(canonPairs(edges0), Seq("a"), _.dropDuplicates(Seq("a", "b")))
+
+  /** Both orientations of every canonical pair, deduped in ONE hash(a)
+    * exchange (hash(a) satisfies the (a, b) dedup clustering; the arms are
+    * disjoint, a<b vs a>b), pinned so the degree aggregation and a-keyed
+    * joins downstream consume it without a further shuffle. */
+  private def symCanonEdges(edges0: DataFrame): DataFrame = {
+    val raw = canonPairs(edges0)
+    Pin.keyed(raw.unionByName(raw.select(col("b").as("a"), col("a").as("b"))),
+      Seq("a"), _.dropDuplicates(Seq("a", "b")))
+  }
+
   /** Triangle count over an arbitrary (src, dst) edge frame, as a 1-row
     * (triangles) DataFrame. Degree-ordered orientation (the standard
     * compact-forward / node-iterator++ trick): orient every undirected
@@ -320,33 +377,8 @@ object GraphAlgorithms {
     * aggregation, wedge self-join, closing semi-join); AQE handles
     * residual skew. */
   def triangleCountEdges(edges0: DataFrame): DataFrame = {
-    // canonical undirected form: low id -> high id, deduped, no loops
-    // Dedup rides the hash(a) repartition (one exchange, not two — r14,
-    // guide §2.4); Pin.keyed (r15) keeps the hash(a) layout VISIBLE, so
-    // orientByDegree's a-side attachment join, the closing semi-join's
-    // (a, b) clustering and the bloom-build scan all consume it free.
-    val canon = Pin.keyed(edges0
-      .filter(col("src") =!= col("dst"))
-      .select(least(col("src"), col("dst")).as("a"),
-        greatest(col("src"), col("dst")).as("b")),
-      Seq("a"), _.dropDuplicates(Seq("a", "b")))
-    val m = canon.count() // materializes the pin; sizes the bloom (r15)
-    val oriented = orientByDegree(canon)
-    val wedges = wedgeJoin(oriented)
-    // Close against the canonical edge set. wedgeJoin guarantees x < y
-    // (e1.v < e2.v), so the keys are plain (x, y) = (a, b) — no
-    // least/greatest evaluation on the fat side. The canon side is
-    // hinted shuffle_hash: the wedge side is orders of magnitude larger
-    // (O(Σ fwd_deg²) rows vs m) and a sort-merge join would SORT it —
-    // the measured dominant cost of this query family (guide §3.1);
-    // hashing the m-row canon partitions is the right asymmetric build.
-    // r15: non-closing wedges are additionally dropped map-side by a
-    // bloom prefilter BEFORE the wedge exchange (guide §3.2) — see
-    // wedgeBloomPrefilter for sizing and the exactness argument.
-    wedgeBloomPrefilter(wedges.select(col("x"), col("y")), canon, m)
-      .join(canon.hint("shuffle_hash"),
-        col("x") === col("a") && col("y") === col("b"), "left_semi")
-      .agg(count(lit(1)).as("triangles"))
+    val canon = canonEdges(edges0)
+    closedWedges(canon, canon.count()).agg(count(lit(1)).as("triangles"))
   }
 
   /** Per-node triangle counts and local clustering coefficient (GDS
@@ -357,26 +389,11 @@ object GraphAlgorithms {
     * one extra explode+aggregate attributes each closed triangle to its
     * three corners. Returns (id, triangles, lcc). */
   def localClusteringCoefficient(edges0: DataFrame): DataFrame = {
-    // Dedup rides the hash(a) repartition (one exchange, not two — r14,
-    // guide §2.4); Pin.keyed (r15) keeps the hash(a) layout visible for
-    // orientByDegree's a-side join and the closing semi-join.
-    val canon = Pin.keyed(edges0
-      .filter(col("src") =!= col("dst"))
-      .select(least(col("src"), col("dst")).as("a"),
-        greatest(col("src"), col("dst")).as("b")),
-      Seq("a"), _.dropDuplicates(Seq("a", "b")))
-    val m = canon.count() // materializes the pin; sizes the bloom (r15)
+    val canon = canonEdges(edges0)
+    val m = canon.count()
     val deg = canon.select(explode(array(col("a"), col("b"))).as("id"))
       .groupBy(col("id")).agg(count(lit(1)).as("deg"))
-    val oriented = orientByDegree(canon)
-    // Same closing-join shape as triangleCountEdges: plain (x, y) keys
-    // (wedgeJoin guarantees x < y) + shuffle_hash on the small canon side
-    // so the fat wedge side is never sorted; bloom prefilter before the
-    // wedge exchange (r15, guide §3.2).
-    val tri = wedgeBloomPrefilter(wedgeJoin(oriented), canon, m)
-      .join(canon.hint("shuffle_hash"),
-        col("x") === col("a") && col("y") === col("b"), "left_semi")
-    val perNode = tri
+    val perNode = closedWedges(canon, m)
       .select(explode(array(col("w0"), col("x"), col("y"))).as("id"))
       .groupBy(col("id")).agg(count(lit(1)).as("t"))
     deg.join(perNode, Seq("id"), "left_outer")
@@ -388,6 +405,19 @@ object GraphAlgorithms {
           .otherwise(lit(0.0)).as("lcc"))
   }
 
+  /** The closed wedges (w0, x, y), x < y, of a canonical edge set — each
+    * triangle exactly once: [[orientByDegree]], [[wedgeJoin]], the bloom
+    * prefilter against canon BEFORE the wedge exchange, then the closing
+    * semi-join on plain (x, y) = (a, b) keys (no least/greatest on the fat
+    * side). The canon side is hinted shuffle_hash: the wedge side is
+    * O(Σ fwd_deg²) rows vs m, and a sort-merge join would SORT it — the
+    * measured dominant cost of this query family. `m` is canon's row
+    * count; 0 skips the bloom. */
+  private def closedWedges(canon: DataFrame, m: Long): DataFrame =
+    wedgeBloomPrefilter(wedgeJoin(orientByDegree(canon)), canon, m)
+      .join(canon.hint("shuffle_hash"),
+        col("x") === col("a") && col("y") === col("b"), "left_semi")
+
   /** Forward-degree orientation of a canonical (a < b, deduped, loop-free)
     * undirected edge set: each edge points from its lower-(degree, id)
     * endpoint to the higher one, so every node's forward degree is
@@ -396,8 +426,6 @@ object GraphAlgorithms {
   private[graft] def orientByDegree(canon: DataFrame): DataFrame = {
     val deg = canon.select(explode(array(col("a"), col("b"))).as("id"))
       .groupBy("id").agg(count(lit(1)).as("deg"))
-    // shuffle_hash on the n-row degree side keeps the m-row canon side
-    // unsorted through both attachment joins (guide §3.1).
     val ranked = canon
       .join(deg.select(col("id").as("a"), col("deg").as("da"))
         .hint("shuffle_hash"), "a")
@@ -423,7 +451,7 @@ object GraphAlgorithms {
   /** Bloom-prefilter of the wedge frame against canon's (a, b) edge key,
     * applied BEFORE the closing semi-join so non-closing wedges die map-side
     * instead of crossing the wedge exchange — the engine's largest single
-    * shuffle (~400 MB at sf0.1, O(Σ fwd_deg²) rows vs m; guide §3.2). Built
+    * shuffle (~400 MB at sf0.1, O(Σ fwd_deg²) rows vs m). Built
     * via [[org.apache.spark.sql.graftx.BloomBridge]]: a distributed
     * bloom_filter_agg scalar subquery over the (pinned, cached) canon frame,
     * probed with the same xxhash64 of the wedge's (x, y) — exactly the plan
@@ -432,7 +460,7 @@ object GraphAlgorithms {
     * positives are removed by the semi-join itself, so results are
     * unchanged by construction.
     *
-    * Sizing (§5): `m` is the exact canon count (one cheap job over the
+    * Sizing: `m` is the exact canon count (one cheap job over the
     * pinned blocks). Bits target 3% fpp, capped at
     * `spark.graft.bloom.maxBits` (default 2^27 = 16 MB) so the broadcast
     * value stays bounded on huge graphs — past the cap the filter saturates
@@ -472,40 +500,25 @@ object GraphAlgorithms {
     * Nothing materializes per-pair state — memory is O(reached ×
     * sources-that-reach), the Brandes invariant.
     *
-    * Per-round job shape (VERDICT r13 #1, adjudicated by the BetwProbe
-    * A/B): the forward visited set is a LAZY union of the already-pinned
-    * levels (no per-round visited checkpoint write — the anti-join
-    * re-reads cached level blocks), convergence is the 1-row aggregate
-    * that materializes the round's pin, and the backward sweep pins only
-    * the inner-join contrib frame per level — the zero-fill for
-    * contribution-less nodes happens at the USE site (a coalesce inside
-    * the next level's `upper` join) instead of a per-level left-outer
-    * materialization. Measured: 98 → 85 driver-visible jobs and v0 19.8s
-    * → v2 16.9s mean (noisy window; job count is the stable signal —
-    * fewer barriers is what the driver's loud-window readings tax). */
+    * The backward sweep pins only the inner-join contrib frame per level —
+    * the zero-fill for contribution-less nodes happens at the USE site (a
+    * coalesce inside the next level's `upper` join) instead of a per-level
+    * left-outer materialization (measured 98 → 85 driver-visible jobs). */
   def betweenness(edges0: DataFrame, sources: DataFrame,
       directed: Boolean = false, maxDepth: Int = 50): DataFrame = {
-    val spark = edges0.sparkSession
     val base = edges0.select(col("src").cast(LongType).as("src"),
       col("dst").cast(LongType).as("dst"))
-    val sym = if (directed) base
-      else base.unionByName(base.select(col("dst").as("src"),
-        col("src").as("dst")))
-    // One exchange, not two: repartition on src, then dedup in place —
-    // hash(src) satisfies the (src, dst) clustering the dedup aggregate
-    // needs. Pin.keyed (r15) keeps the hash(src) layout VISIBLE through
-    // the pin, so no per-round join re-exchanges the edge frame (plain
-    // Pin lost the metadata and re-shuffled it every round).
-    val e = Pin.keyed(sym, Seq("src"), _.dropDuplicates(Seq("src", "dst")))
+    // One exchange, not two: hash(src) satisfies the (src, dst) clustering
+    // the dedup aggregate needs.
+    val e = Pin.keyed(symmetrized(base, directed), Seq("src"),
+      _.dropDuplicates(Seq("src", "dst")))
     val src0 = sources.select(col("id").cast(LongType).as("s")).distinct()
     // forward BFS: levels(k) = (s, v, sigma) first reached at depth k.
     // visited is a lazy union of the pinned levels — no per-round visited
     // checkpoint; the anti-join re-reads the levels' cached blocks.
     var levels = Vector(Pin(src0.select(col("s"), col("s").as("v"),
       lit(1.0).as("sigma"))))
-    var depth = 0
-    var go = true
-    while (go && depth < maxDepth) {
+    untilConverged(maxDepth, s"betweenness BFS exceeded $maxDepth levels") { _ =>
       val visited = levels.map(_.select(col("s"), col("v").as("_v2")))
         .reduce(_.unionByName(_))
       // Aggregate BEFORE the visited anti-join (r14): exclusion is
@@ -523,13 +536,10 @@ object GraphAlgorithms {
         .agg(sum(col("sigma")).as("sigma"))
         .join(visited.hint("shuffle_hash"), Seq("s", "_v2"), "left_anti")
         .select(col("s"), col("_v2").as("v"), col("sigma")))
-      // Convergence count folded into the aggregate that materializes the
-      // round's pin (the sssp r13 fold): one driver-visible action/round.
-      if (next.agg(count(lit(1))).head().getLong(0) == 0L) go = false
-      else { levels = levels :+ next; depth += 1 }
+      val empty = next.agg(count(lit(1))).head().getLong(0) == 0L
+      if (!empty) levels :+= next
+      empty
     }
-    if (go) throw new IllegalStateException(
-      s"betweenness BFS exceeded $maxDepth levels")
     // backward accumulation: delta(v@k) = sum over BFS-DAG successors w@k+1
     // of sigma(v)/sigma(w) * (1 + delta(w)); bc accumulates non-source rows.
     // Only the inner-join contrib frame is pinned per level — nodes with
@@ -583,37 +593,24 @@ object GraphAlgorithms {
   }
 
   /** Per-edge triangle support of a canonical (a < b) undirected edge
-    * frame: every triangle is found ONCE via the degree-oriented wedge
-    * join (the [[triangleCountEdges]] machinery — fan-out bounded by
-    * forward degree), then exploded back onto its three edges and
-    * counted. One wedge join + one map-side-combinable aggregation. */
+    * frame: every triangle is found ONCE by [[closedWedges]], then exploded
+    * back onto its three edges and counted. One wedge join + one
+    * map-side-combinable aggregation.
+    *
+    * PER-ROUND caller (k-truss): the bloom build costs one aggregate job +
+    * a subquery per peeling round, so unless `spark.graft.bloom.minItems`
+    * is set it needs at least 1M surviving edges — below that the wedge
+    * exchange is already small and the per-round builds measured a net
+    * loss (+7 jobs, +0.6 s at sf0.1's ~750k edges). */
   private[graft] def edgeSupport(canon: DataFrame, m: Long): DataFrame = {
-    val oriented = orientByDegree(canon)
-    val wedges = oriented.as("e1")
-      .join(oriented.as("e2"),
-        col("e1.u") === col("e2.u") && col("e1.v") < col("e2.v"))
-      .select(col("e1.u").as("u"), col("e1.v").as("x"), col("e2.v").as("y"))
-    // plain (x, y) keys (x < y by construction) + shuffle_hash on the
-    // small canon side — see triangleCountEdges; bloom prefilter before
-    // the wedge exchange (r15, guide §3.2). `m` is the caller's canon
-    // count (the ktruss loop counts each round's survivors anyway).
-    // PER-ROUND caller: the bloom build costs one aggregate job + a
-    // subquery per peeling round, so it must clear a higher bar than the
-    // one-shot wedge queries — below ~1M surviving edges the wedge
-    // exchange is already small and the r15 bench measured the per-round
-    // builds as a net loss (+7 jobs, +0.6 s at sf0.1's ~750k edges).
-    val iterativeFloor = math.max(1L << 20,
-      canon.sparkSession.conf
-        .get("spark.graft.bloom.minItems", "32768").toLong)
-    val tri = wedgeBloomPrefilter(wedges, canon,
-      if (m >= iterativeFloor) m else 0L)
-      .join(canon.hint("shuffle_hash"),
-        col("x") === col("a") && col("y") === col("b"), "left_semi")
-    tri.select(explode(array(
-        struct(least(col("u"), col("x")).as("a"),
-          greatest(col("u"), col("x")).as("b")),
-        struct(least(col("u"), col("y")).as("a"),
-          greatest(col("u"), col("y")).as("b")),
+    val floor = canon.sparkSession.conf.getOption("spark.graft.bloom.minItems")
+      .map(_.toLong).getOrElse(1L << 20)
+    closedWedges(canon, if (m >= floor) m else 0L)
+      .select(explode(array(
+        struct(least(col("w0"), col("x")).as("a"),
+          greatest(col("w0"), col("x")).as("b")),
+        struct(least(col("w0"), col("y")).as("a"),
+          greatest(col("w0"), col("y")).as("b")),
         struct(col("x").as("a"), col("y").as("b")))).as("e"))
       .select(col("e.a").as("a"), col("e.b").as("b"))
       .groupBy(col("a"), col("b")).agg(count(lit(1)).as("support"))
@@ -630,35 +627,23 @@ object GraphAlgorithms {
     * surviving edge frame pinned per round — the standard distributed
     * peeling formulation (per-round full recount; the delta-maintenance
     * variant trades simplicity for fewer recounts and is not needed
-    * until round counts grow). Rounds are bounded by the peeling depth;
-    * the ceiling throws rather than silently truncating (the fixpoint
-    * rule every graft loop follows). */
+    * until round counts grow). */
   def kTrussEdges(edges0: DataFrame, k: Int,
       maxIterations: Int = 50): DataFrame = {
     require(k >= 3, s"k-truss needs k >= 3, got $k")
-    // Same single-exchange canonicalization as triangleCountEdges (r14),
-    // with the hash(a) layout kept visible (Pin.keyed, r15).
-    var cur = Pin.keyed(edges0
-      .filter(col("src") =!= col("dst"))
-      .select(least(col("src"), col("dst")).as("a"),
-        greatest(col("src"), col("dst")).as("b")),
-      Seq("a"), _.dropDuplicates(Seq("a", "b")))
+    var cur = canonEdges(edges0)
     var n = cur.count()
-    var changed = n > 0
-    var it = 0
-    while (changed && it < maxIterations) {
-      val support = edgeSupport(cur, n)
-      val next = Pin(cur.join(support, Seq("a", "b"), "left_outer")
+    if (n > 0) untilConverged(maxIterations,
+        s"k-truss did not converge within $maxIterations peeling rounds") { _ =>
+      val next = Pin(cur.join(edgeSupport(cur, n), Seq("a", "b"), "left_outer")
         .filter(coalesce(col("support"), lit(0L)) >= (k - 2).toLong)
         .select(col("a"), col("b")))
       val nn = next.count()
-      changed = nn != n
+      val stable = nn == n
       cur = next
       n = nn
-      it += 1
+      stable
     }
-    if (changed) throw new IllegalStateException(
-      s"k-truss did not converge within $maxIterations peeling rounds")
     cur
   }
 
@@ -669,60 +654,31 @@ object GraphAlgorithms {
     * traversed; weights must be positive). `directed=false` (the default)
     * symmetrizes the edge list.
     *
-    * Scale shape: the weighted edge frame is pinned pre-partitioned on
-    * src once; each round joins only the FRONTIER (nodes whose distance
-    * improved last round) against it — propagation work per round is
-    * proportional to the active frontier, not the full node set, and the
-    * pinned edge partitioning means no round re-shuffles the edges (the
-    * same iterative skeleton as [[pageRank]]/[[connectedComponents]],
-    * plus the delta optimization those don't need). Convergence: with
+    * Scale shape: the weighted edge frame is pinned hash(src) once; each
+    * round joins only the FRONTIER (nodes whose distance improved last
+    * round) against it — propagation work per round is proportional to
+    * the active frontier, not the full node set. Convergence: with
     * positive weights each node's distance is finalized after at most
     * (shortest-path hop count) rounds; the loop stops when a round
-    * improves nothing. If the frontier is still active at
-    * `maxIterations` the distances are NOT final (a longer weighted
-    * diameter than the cap) and the call throws instead of returning
-    * overestimates — same no-silent-truncation rule as
-    * [[connectedComponents]]/[[kTrussEdges]]. */
+    * improves nothing, and an active frontier at `maxIterations` throws
+    * rather than returning overestimates. */
   def sssp(graph: PropertyGraph, sources: DataFrame,
       weights: Map[String, Double], directed: Boolean = false,
       maxIterations: Int = 50): DataFrame = {
-    require(weights.nonEmpty, "weights must name >= 1 relationship type")
-    require(weights.values.forall(_ > 0), s"weights must be positive: $weights")
-    val spark = sources.sparkSession
-    val typed = weights.toSeq.flatMap { case (t, w) =>
-      graph.relScansFor(Seq(t)).map(_.df.select(
-        col(PropertyGraph.SRC).as("src"), col(PropertyGraph.TGT).as("dst"),
-        lit(w).as("w")))
-    }.reduceOption(_.unionByName(_)).getOrElse(
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        StructType(Seq(StructField("src", LongType), StructField("dst", LongType),
-          StructField("w", DoubleType)))))
-    val sym = if (directed) typed
-      else typed.unionByName(typed.select(
-        col("dst").as("src"), col("src").as("dst"), col("w")))
-    // Pinned pre-partitioned on src WITH the partitioning kept visible
-    // (Pin.keyed, r15): every round's frontier join consumes the hash(src)
-    // layout, so the edge list shuffles once per call, ever. The r14 plain
-    // Pin lost the metadata (UnknownPartitioning after localCheckpoint)
-    // and re-exchanged the full edge frame EVERY round — measured 473 MB
-    // of the query's shuffle at sf0.1, ~90% of it this frame.
-    val e = Pin.keyed(sym, Seq("src"))
+    val e = Pin.keyed(symmetrized(weightedEdges(graph, weights), directed),
+      Seq("src"))
     var dist = Pin(sources.select(col("id").cast(LongType).as("id"))
       .distinct().select(col("id"), lit(0.0).as("dist")))
     var frontier = dist
-    var it = 0
     var active = frontier.count()
-    while (active > 0 && it < maxIterations) {
-      val cand = ssspCandidates(e, frontier)
-      // ONE lazy pin per round: frontier and dist are cheap projections
-      // of the pinned merge, so deriving them lazily re-reads merged's
-      // cached blocks instead of writing two more block sets per round
-      // (three pins per round measured ~15% slower at sf0.1). Lineage
-      // stays flat: both chains root at this round's pinned frame.
-      // shuffle_hash on the (smaller) candidate side: SMJ would sort the
-      // full dist frame every round (r14, guide §3.1).
+    if (active > 0) untilConverged(maxIterations,
+        s"sssp did not converge within $maxIterations rounds " +
+          s"($active nodes still improving — raise maxIterations)") { _ =>
+      // One pin per round: three (merged, frontier, dist) measured ~15%
+      // slower at sf0.1.
       val merged = Pin(dist.withColumnRenamed("dist", "old")
-        .join(cand.hint("shuffle_hash"), Seq("id"), "full_outer"))
+        .join(ssspCandidates(e, frontier).hint("shuffle_hash"), Seq("id"),
+          "full_outer"))
       val improved = col("nd").isNotNull &&
         (col("old").isNull || col("nd") < col("old"))
       frontier = merged.filter(improved)
@@ -730,17 +686,9 @@ object GraphAlgorithms {
       dist = merged.select(col("id"),
         least(coalesce(col("old"), col("nd")),
           coalesce(col("nd"), col("old"))).as("dist"))
-      // Convergence check folded into the aggregate that materializes the
-      // round's pin (pageRank's mass-aggregate trick, VERDICT r12 #2):
-      // the 1-row count runs directly over `merged`, so the pin
-      // materialization and the active-frontier count are ONE
-      // driver-visible action per round instead of two.
       active = merged.agg(count(when(improved, lit(1)))).head().getLong(0)
-      it += 1
+      active == 0
     }
-    if (active > 0) throw new IllegalStateException(
-      s"sssp did not converge within $maxIterations rounds " +
-        s"($active nodes still improving — raise maxIterations)")
     dist
   }
 
@@ -749,48 +697,34 @@ object GraphAlgorithms {
     * relevance/recommendation score around a query set. Update rule per
     * round: r(v) = (1-d)·p(v) + d·(Σ in-contribs + dangling_mass·p(v)),
     * where p is the seed distribution; total mass stays exactly 1, so the
-    * dangling mass is 1 − transferred (one 1-row aggregate per round,
-    * same as [[pageRank]]).
+    * dangling mass is 1 − transferred.
     *
-    * Scale shape is [[pageRank]]'s: links pinned pre-partitioned on src
-    * (no per-round edge shuffle), one pin + one job per round. The
-    * working set is edge endpoints ∪ seeds; every node OUTSIDE it — and
-    * every working node unreachable from the seeds — has exactly 0 rank
-    * (no restart mass, no in-mass), so the unreachable remainder is
-    * appended as a closed-form 0 without joining the loop. */
+    * Scale shape is [[pageRank]]'s. The working set is edge endpoints ∪
+    * seeds; every node OUTSIDE it — and every working node unreachable
+    * from the seeds — has exactly 0 rank (no restart mass, no in-mass), so
+    * the unreachable remainder is appended as a closed-form 0 without
+    * joining the loop. */
   def personalizedPageRank(graph: PropertyGraph, seeds: DataFrame,
       iterations: Int = 10, damping: Double = 0.85,
       relTypes: Seq[String] = Seq.empty): DataFrame = {
-    // One src exchange feeds the degree aggregation AND the links join on
-    // both sides (r14, guide §2.4) — the old shape shuffled the edge frame
-    // twice (groupBy input + join left).
     val e = validated(edges(graph, relTypes), graph)
-    // Pin.keyed (r15): one explicit hash(src) exchange feeds the degree
-    // aggregation and both join sides, and the layout claim survives the
-    // pin so no round re-exchanges links (see pageRank).
-    val links = Pin.keyed(e, Seq("src"), ep =>
-      ep.join(ep.groupBy(col("src")).agg(count(lit(1)).as("deg")), "src"))
+    val links = normLinks(e, count(lit(1)).as("deg"))
     val seedIds = seeds.select(col("id").cast(LongType).as("id")).distinct()
     val k = seedIds.count()
     require(k > 0, "personalizedPageRank needs at least one seed")
-    val base = Pin.keyed(e.select(col("src").as("id"))
-      .unionByName(e.select(col("dst").as("id")))
-      .unionByName(seedIds), Seq("id"), _.distinct()
-      .join(seedIds.withColumn("_p", lit(1.0 / k)), Seq("id"), "left_outer")
-      .select(col("id"), coalesce(col("_p"), lit(0.0)).as("p")))
-    var ranks = base.select(col("id"), col("p").as("rank"))
-    for (_ <- 1 to iterations) {
-      val contribs = rankContribs(links, ranks)
-      val received = Pin(base.join(contribs, Seq("id"), "left_outer")
-        .select(col("id"), col("p"),
-          coalesce(col("contrib"), lit(0.0)).as("contrib")))
-      val tc = received.agg(coalesce(sum("contrib"), lit(0.0)))
-        .head().getDouble(0)
-      val miss = 1.0 - tc
-      ranks = received.select(col("id"),
-        (lit(1.0 - damping) * col("p") +
-          lit(damping) * (col("contrib") + lit(miss) * col("p"))).as("rank"))
+    val base = Pin.keyed(endpointIds(e).unionByName(seedIds), Seq("id"),
+      _.distinct()
+        .join(seedIds.withColumn("_p", lit(1.0 / k)), Seq("id"), "left_outer")
+        .select(col("id"), coalesce(col("_p"), lit(0.0)).as("p")))
+    val ranks = rankRounds(links, base, base.select(col("id"), col("p").as("rank")),
+        iterations, col("rank") / col("deg"), Some(sum(col("contrib")))) {
+      (received, tc) =>
+        received.select(col("id"),
+          (lit(1.0 - damping) * col("p") +
+            lit(damping) * (col("contrib") + lit(1.0 - tc) * col("p"))).as("rank"))
     }
+    // Anti-joined against the keyed `base` (not `ranks`): its visible
+    // hash(id) layout spares the exchange on that side.
     val outside = nodeIds(graph)
       .join(base.select(col("id")), Seq("id"), "left_anti")
       .select(col("id"), lit(0.0).as("rank"))
@@ -813,19 +747,14 @@ object GraphAlgorithms {
     * zero — a null sum on an existing group is distinguished from the
     * no-in-edges join miss below).
     *
-    * Scale shape: the edge list is pinned pre-partitioned on src once;
-    * each round is two keyed joins + two map-side-combinable sums
-    * consuming that partitioning — no per-round edge shuffle (the
-    * [[sssp]]/[[pageRank]] skeleton). */
+    * Scale shape: each round is two keyed joins + two map-side-combinable
+    * sums over the pinned hash(src) edge list. */
   def hitsEdges(edges0: DataFrame, iterations: Int = 2): DataFrame = {
     require(iterations >= 1, "iterations must be >= 1")
     val dec = DecimalType(38, 0)
-    // Pin.keyed (r15): hash(src)/hash(id) layouts stay visible through the
-    // pins, so the per-round hub-side joins skip the edge re-exchange.
     val e = Pin.keyed(edges0.select(col("src").cast(LongType).as("src"),
       col("dst").cast(LongType).as("dst")), Seq("src"))
-    val nodes = Pin.keyed(e.select(col("src").as("id"))
-      .unionByName(e.select(col("dst").as("id"))), Seq("id"), _.distinct())
+    val nodes = connectedIds(e)
     var scores = Pin(nodes.select(col("id"),
       lit(1).cast(dec).as("hub"), lit(1).cast(dec).as("auth")))
     // Distinguish "no in/out edges" (join miss — score 0) from Decimal
@@ -834,13 +763,12 @@ object GraphAlgorithms {
     // exists, so a null sum there is overflow and must FAIL the job, not
     // silently zero the highest-degree hub. (Under ANSI mode the sum
     // itself throws; this guard covers the non-ANSI configuration.)
-    def sumOr(s: org.apache.spark.sql.Column, n: org.apache.spark.sql.Column) =
+    def sumOr(s: Column, n: Column) =
       when(n.isNull, lit(0).cast(dec))
         .when(s.isNull, raise_error(lit(
           "hits: Decimal(38,0) overflow — reduce iterations")).cast(dec))
         .otherwise(s)
-    var it = 0
-    while (it < iterations) {
+    for (_ <- 1 to iterations) {
       val authSums = e.join(scores.hint("shuffle_hash"),
           e("src") === scores("id"))
         .groupBy(col("dst")).agg(sum(col("hub")).as("_a"),
@@ -856,7 +784,6 @@ object GraphAlgorithms {
           "left_outer")
         .select(col("id"), sumOr(col("_h"), col("_hc")).as("hub"),
           col("auth")))
-      it += 1
     }
     scores
   }
@@ -880,19 +807,7 @@ object GraphAlgorithms {
     * is independent of partitioning and aggregation order — which also
     * lets a SQL oracle replay it bit-for-bit. */
   def degreeAssortativity(edges0: DataFrame): DataFrame = {
-    // One exchange, not three (r14, guide §2.4): dedup rides the hash(a)
-    // repartition of the symmetrized union (hash(a) satisfies the (a, b)
-    // dedup clustering — the arms are disjoint, a<b vs a>b, so the result
-    // set is the old canon∪reverse exactly), and the pinned hash(a)
-    // partitioning feeds the degree aggregation and the x-attachment join
-    // below with no further shuffle.
-    val raw = edges0
-      .filter(col("src") =!= col("dst"))
-      .select(least(col("src"), col("dst")).as("a"),
-        greatest(col("src"), col("dst")).as("b"))
-    val sym = Pin.keyed(raw.unionByName(
-        raw.select(col("b").as("a"), col("a").as("b"))),
-      Seq("a"), _.dropDuplicates(Seq("a", "b")))
+    val sym = symCanonEdges(edges0)
     val deg = sym.groupBy(col("a")).agg(count(lit(1)).as("d"))
     val dec = DecimalType(38, 0)
     val pairs = sym
@@ -928,12 +843,11 @@ object GraphAlgorithms {
     * [[connectedComponents]] with a mode instead of a min. */
   def labelPropagation(graph: PropertyGraph,
       relTypes: Seq[String] = Seq.empty, maxIterations: Int = 10): DataFrame = {
-    val e0 = validated(edges(graph, relTypes), graph)
     // One exchange, not two: hash(dst) satisfies the (src, dst) dedup
     // clustering, and the pinned partitioning feeds every round's
-    // labels-join (r14, guide §2.4).
-    val und = Pin.keyed(e0.unionByName(e0.select(col("dst").as("src"),
-        col("src").as("dst"))),
+    // labels-join.
+    val und = Pin.keyed(
+      symmetrized(validated(edges(graph, relTypes), graph), directed = false),
       Seq("dst"), _.dropDuplicates(Seq("src", "dst")))
     var lbl = Pin(und.select(col("src").as("id")).distinct()
       .select(col("id"), col("id").as("label")))
@@ -953,10 +867,7 @@ object GraphAlgorithms {
       lbl = next
       it += 1
     }
-    val isolated = nodeIds(graph)
-      .join(lbl.select(col("id")), Seq("id"), "left_anti")
-      .select(col("id"), col("id").as("label"))
-    lbl.unionByName(isolated)
+    withIsolated(graph, lbl, col("id"))
   }
 
   /** The k-core: the maximal subgraph in which every node has degree
@@ -976,19 +887,13 @@ object GraphAlgorithms {
   def kCoreEdges(edges0: DataFrame, k: Int,
       maxIterations: Int = 50): DataFrame = {
     require(k >= 1, "k >= 1")
-    // Same single-exchange canonicalization as degreeAssortativity (r14,
-    // guide §2.4); the pinned hash(a) feeds the first round's degree
-    // aggregation and a-semi-join shuffle-free.
-    val raw = edges0.filter(col("src") =!= col("dst"))
-      .select(least(col("src"), col("dst")).as("a"),
-        greatest(col("src"), col("dst")).as("b"))
-    var sym = Pin.keyed(raw.unionByName(
-        raw.select(col("b").as("a"), col("a").as("b"))),
-      Seq("a"), _.dropDuplicates(Seq("a", "b")))
+    var sym = symCanonEdges(edges0)
     var nEdges = sym.count()
-    var prev = -1L
-    var it = 0
-    while (nEdges != prev && nEdges > 0 && it < maxIterations) {
+    // Peeling can need many rounds (a caterpillar graph sheds one layer per
+    // round); at the cap the survivors are a SUPERSET of the true core.
+    if (nEdges > 0) untilConverged(maxIterations,
+        s"k-core peeling did not converge within $maxIterations rounds " +
+          "(raise maxIterations)") { _ =>
       val keep = sym.groupBy(col("a")).agg(count(lit(1)).as("d"))
         .filter(col("d") >= k).select(col("a"))
       // b-semi first, a-semi LAST: left-semi preserves the left side's
@@ -999,17 +904,11 @@ object GraphAlgorithms {
         .join(keep.select(col("a").as("b")), Seq("b"), "left_semi")
         .join(keep, Seq("a"), "left_semi")
         .select(col("a"), col("b")))
-      prev = nEdges
+      val prev = nEdges
       nEdges = next.count()
       sym = next
-      it += 1
+      nEdges == prev || nEdges == 0
     }
-    // Peeling can need many rounds (a caterpillar graph sheds one layer per
-    // round); at the cap the survivor set is a SUPERSET of the true core —
-    // throw rather than return it (the same fixpoint rule as kTrussEdges).
-    if (nEdges != prev && nEdges > 0) throw new IllegalStateException(
-      s"k-core peeling did not converge within $maxIterations rounds " +
-        "(raise maxIterations)")
     sym.groupBy(col("a").as("id")).agg(count(lit(1)).as("degree"))
   }
 
@@ -1019,13 +918,11 @@ object GraphAlgorithms {
     * is its LONGEST incoming path length, the stage index a dependency
     * scheduler would run it at. Nodes touching no edge of the requested
     * types sit at level 0. Throws a classified error if a cycle remains
-    * after peeling (no topological order exists), and the usual
-    * IllegalStateException when the cap bites first (levels = longest
-    * path, so rounds are inherently depth-bound — the throwing cap is the
-    * no-silent-truncation rule, not a workaround).
+    * after peeling (no topological order exists); rounds are depth-bound
+    * (levels = longest path), so the cap throws too.
     *
-    * Scale shape: the sssp skeleton — edges pinned pre-partitioned on
-    * src ONCE; each round joins only the newly-peeled FRONT against them
+    * Scale shape: the sssp skeleton — each round joins only the
+    * newly-peeled FRONT against the pinned hash(src) edges
     * to decrement a pinned in-degree frame (O(nodes) state, not
     * O(edges)), and nodes hitting zero become the next front. Work per
     * round is proportional to the front's out-edges; the edge frame is
@@ -1045,8 +942,6 @@ object GraphAlgorithms {
     // No dedup pass: Kahn is correct on multigraphs (in-degrees and
     // decrements both count edge multiplicity), so duplicate edges don't
     // warrant a 1.9M-row distinct shuffle.
-    // Pin.keyed (r15): the hash(src) layout stays visible, so every Kahn
-    // round's decrement join consumes it instead of re-exchanging e.
     val e = Pin.keyed(e0, Seq("src"))
     val indeg0 = e.groupBy(col("dst").as("id")).agg(count(lit(1)).as("d"))
     var frontier: DataFrame = Pin(e.select(col("src").as("id")).distinct()
@@ -1054,32 +949,19 @@ object GraphAlgorithms {
       .select(col("id"), lit(0L).as("level")))
     var indeg = indeg0
     var levels = Vector.empty[DataFrame]
-    var level = 0L
-    var frontN = frontier.count()
-    while (frontN > 0 && level < maxIterations) {
-      levels = levels :+ frontier
-      val dec = topoDecrements(e, frontier)
-      // ONE lazy pin per round; frontier/indeg are cheap projections of it
-      // (the sssp merged-frame pattern).
-      // shuffle_hash on the (front-sized) decrement side: SMJ would sort
-      // the full in-degree frame every round (r14, guide §3.1).
-      val merged = Pin(indeg.join(dec.hint("shuffle_hash"),
+    if (frontier.count() > 0) untilConverged(maxIterations,
+        s"topologicalLevels did not finish within $maxIterations rounds " +
+          "(longest path exceeds the cap — raise maxIterations)") { level =>
+      levels :+= frontier
+      val merged = Pin(indeg.join(topoDecrements(e, frontier).hint("shuffle_hash"),
           Seq("id"), "left_outer")
         .select(col("id"),
           (col("d") - coalesce(col("rm"), lit(0L))).as("d")))
-      level += 1
       frontier = merged.filter(col("d") === 0)
-        .select(col("id"), lit(level).as("level"))
+        .select(col("id"), lit(level.toLong).as("level"))
       indeg = merged.filter(col("d") > 0)
-      // Convergence count folded into the aggregate that materializes the
-      // round's pin (sssp's r13 fold): one driver-visible action per
-      // round on the pinned frame itself.
-      frontN = merged.agg(count(when(col("d") === 0, lit(1))))
-        .head().getLong(0)
+      merged.agg(count(when(col("d") === 0, lit(1)))).head().getLong(0) == 0
     }
-    if (frontN > 0) throw new IllegalStateException(
-      s"topologicalLevels did not finish within $maxIterations rounds " +
-        "(longest path exceeds the cap — raise maxIterations)")
     val cyclic = indeg.limit(1).count()
     if (cyclic > 0) throw new graft.api.CypherException(
       graft.api.CypherError.ArgumentError, graft.api.CypherError.Runtime,
@@ -1104,9 +986,8 @@ object GraphAlgorithms {
     * root's SCC backward through INTRA-COLOR edges only (a node of color
     * c reaching c's root while colored c is mutually reachable with it),
     * (3) extracts all discovered SCCs and removes them. Deterministic:
-    * colors are min-ids, no randomness. Every loop follows the
-    * no-silent-truncation rule — the inner fixpoints and the outer peel
-    * all THROW at their caps.
+    * colors are min-ids, no randomness. The inner fixpoints and the
+    * outer peel all throw at their caps.
     *
     * Scale shape: per inner round one keyed join + min/mark aggregation
     * over the surviving edge frame (pinned per round, monotonically
@@ -1120,25 +1001,22 @@ object GraphAlgorithms {
       relTypes: Seq[String] = Seq.empty, maxOuterRounds: Int = 50,
       maxInnerRounds: Int = 100): DataFrame = {
     val e0 = validated(edges(graph, relTypes), graph)
-    // Single-exchange dedup (r14, guide §2.4) + visible hash(src) layout
-    // (Pin.keyed, r15): every inner color round's rem-side join consumes
-    // the partitioning instead of re-exchanging the surviving edge frame.
     var rem = Pin.keyed(e0.filter(col("src") =!= col("dst")), Seq("src"),
       _.dropDuplicates(Seq("src", "dst")))
-    var active = Pin(rem.select(col("src").as("id"))
-      .unionByName(rem.select(col("dst").as("id"))).distinct())
+    var active = Pin(endpointIds(rem).distinct())
     var activeN = active.count()
     val dec = DecimalType(38, 0)
     var found = Vector.empty[DataFrame]
-    var outer = 0
-    while (activeN > 0 && outer < maxOuterRounds) {
+    if (activeN > 0) untilConverged(maxOuterRounds,
+        s"scc: peeling did not finish within $maxOuterRounds outer rounds " +
+          s"($activeN nodes unresolved — raise maxOuterRounds)") { _ =>
       // ---- forward color propagation to fixpoint (colors only decrease,
       // so the Decimal sum is strictly decreasing until converged)
       var color = Pin(active.select(col("id"), col("id").as("c")))
-      var prevSum: java.math.BigDecimal = null
       var curSum = color.agg(sum(col("c").cast(dec))).head().getDecimal(0)
-      var inner = 0
-      while (prevSum != curSum && inner < maxInnerRounds) {
+      untilConverged(maxInnerRounds,
+          s"scc: color propagation did not converge within $maxInnerRounds " +
+            "rounds (raise maxInnerRounds)") { _ =>
         // shuffle_hash on the color side: rem is the pinned fact frame —
         // never re-shuffled (hash(src) consumed) and never re-sorted.
         val fromPred = rem.join(color.hint("shuffle_hash"),
@@ -1149,14 +1027,12 @@ object GraphAlgorithms {
           Seq("id"), "left_outer")
           .select(col("id"),
             least(col("c"), coalesce(col("pc"), col("c"))).as("c")))
-        prevSum = curSum
-        curSum = next.agg(sum(col("c").cast(dec))).head().getDecimal(0)
+        val nextSum = next.agg(sum(col("c").cast(dec))).head().getDecimal(0)
+        val stable = nextSum == curSum
+        curSum = nextSum
         color = next
-        inner += 1
+        stable
       }
-      if (prevSum != curSum) throw new IllegalStateException(
-        s"scc: color propagation did not converge within $maxInnerRounds " +
-          "rounds (raise maxInnerRounds)")
       // ---- intra-color edges + backward SCC growth from the color roots
       val srcC = color.select(col("id").as("src"), col("c").as("_sc"))
       val dstC = color.select(col("id").as("dst"), col("c").as("_dc"))
@@ -1165,21 +1041,18 @@ object GraphAlgorithms {
         .select(col("src"), col("dst"), col("_sc").as("c")))
       var mark = Pin(color.filter(col("id") === col("c")))
       var markN = mark.count()
-      var prevMark = -1L
-      inner = 0
-      while (markN != prevMark && inner < maxInnerRounds) {
+      untilConverged(maxInnerRounds, s"scc: backward containment did not " +
+          s"converge within $maxInnerRounds rounds (raise maxInnerRounds)") { _ =>
         val grown = intra.join(
             mark.select(col("id").as("dst")).hint("shuffle_hash"), "dst")
           .select(col("src").as("id"), col("c"))
         val next = Pin(mark.unionByName(grown).distinct())
-        prevMark = markN
-        markN = next.count()
+        val nextN = next.count()
+        val stable = nextN == markN
+        markN = nextN
         mark = next
-        inner += 1
+        stable
       }
-      if (markN != prevMark) throw new IllegalStateException(
-        s"scc: backward containment did not converge within " +
-          s"$maxInnerRounds rounds (raise maxInnerRounds)")
       found = found :+ mark.select(col("id"), col("c").as("scc"))
       // ---- remove the extracted SCCs and iterate on the rest
       val gone = mark.select(col("id"))
@@ -1192,11 +1065,8 @@ object GraphAlgorithms {
         .select(col("src"), col("dst")))
       active = Pin(active.join(gone, Seq("id"), "left_anti"))
       activeN = active.count()
-      outer += 1
+      activeN == 0
     }
-    if (activeN > 0) throw new IllegalStateException(
-      s"scc: peeling did not finish within $maxOuterRounds outer rounds " +
-        s"($activeN nodes unresolved — raise maxOuterRounds)")
     // Edge-less nodes (and self-loop-only nodes) are singleton SCCs.
     val sccs = found.reduceOption(_.unionByName(_))
       .getOrElse(e0.limit(0).select(col("src").as("id"),
@@ -1211,8 +1081,6 @@ object GraphAlgorithms {
     * (only the small front shuffles — package-private so AlgosSpec pins
     * the plan shape, same contract as [[ssspCandidates]]). */
   private[graft] def topoDecrements(e: DataFrame, front: DataFrame): DataFrame =
-    // shuffle_hash on the front — same no-sort-of-the-pinned-edges rule
-    // as ssspCandidates (r14, guide §3.1).
     e.join(front.select(col("id").as("src")).hint("shuffle_hash"), "src")
       .groupBy(col("dst").as("id")).agg(count(lit(1)).as("rm"))
 
@@ -1223,22 +1091,15 @@ object GraphAlgorithms {
     * so AlgosSpec can pin the plan shape; losing it would re-shuffle the
     * full edge set every round at scale. */
   private[graft] def ssspCandidates(e: DataFrame, frontier: DataFrame): DataFrame =
-    // shuffle_hash on the frontier: a sort-merge join would SORT the
-    // pinned edge frame every round (the pin preserves partitioning, not
-    // order); hashing the frontier partition is the per-round-cheap build
-    // (r14, guide §3.1).
     e.join(frontier.hint("shuffle_hash"), e("src") === frontier("id"))
       .select(e("dst").as("id"), (col("dist") + col("w")).as("nd"))
       .groupBy("id").agg(min("nd").as("nd"))
 
-  /** Symmetrized, deduped, loop-free neighbor frame (u, v) from a raw
-    * (src, dst) edge list — the shared front door of the neighborhood
-    * functions below. */
-  private def symNeighbors(edges0: DataFrame): DataFrame = {
+  /** Both orientations (u, v) of every loop-free edge, duplicates kept. */
+  private def neighborPairs(edges0: DataFrame): DataFrame = {
     val e = edges0.filter(col("src") =!= col("dst"))
     e.select(col("src").as("u"), col("dst").as("v"))
       .unionByName(e.select(col("dst").as("u"), col("src").as("v")))
-      .distinct()
   }
 
   /** Exact 2-hop ball sizes: for every node with at least one edge, the
@@ -1260,9 +1121,8 @@ object GraphAlgorithms {
     * full graph, so the ball CONTENTS are unaffected. This is how the
     * accuracy gate bounds the exact side without paying the full closure. */
   def neighborhoodSizes2(edges0: DataFrame,
-      ownerFilter: org.apache.spark.sql.Column => org.apache.spark.sql.Column)
-      : DataFrame = {
-    val sym = Pin(symNeighbors(edges0))
+      ownerFilter: Column => Column): DataFrame = {
+    val sym = Pin(neighborPairs(edges0).distinct())
     val own = sym.filter(ownerFilter(col("u")))
     val self = own.select(col("u")).distinct().select(col("u"), col("u").as("v"))
     val twoHop = own.as("h1").join(sym.as("h2"), col("h1.v") === col("h2.u"))
@@ -1274,88 +1134,91 @@ object GraphAlgorithms {
       .select(col("u").as("id"), col("ball2"))
   }
 
-  /** HyperBall-style approximate neighborhood function (Boldi & Vigna,
-    * WWW'14 "HyperBall: a fast sketch-based diameter tool"; the reference
-    * engine has nothing comparable — this is the 100-TB formulation):
-    * every node carries an HLL sketch of its h-hop ball, and one round of
-    * sketch-union along edges grows the radius by one. Returns
-    * (id, ball_est) — the estimated |B(v, maxHops)|, self included.
-    *
-    * Scale shape: the symmetrized edge frame is pinned PRE-PARTITIONED on
-    * its join key once, so each round shuffles only the per-node sketch
-    * frame (sketches stay tiny for small balls — DataSketches HLL is
-    * sparse until ~2^lgK distinct items); per round: one join + one
-    * hll_union_agg groupBy + one merge join. Nothing ever materializes a
-    * pair set, which is the whole point vs [[neighborhoodSizes2]] — ball
-    * counting over a 100-TB edge list is feasible exactly because the
-    * state per node is O(2^lgK) bytes regardless of ball size. Estimates
-    * are deterministic (DataSketches HLL has no run-time randomness), so
-    * the accuracy gate in the registered query is stable. */
   /** Exact harmonic centrality restricted to `sources` (k-source form,
     * the standard sampling approximation — pass every node for the exact
     * value): H(v) = Σ_{s∈sources, s≠v} 1/d(s, v) over undirected
     * (`directed=false`) or directed distances. Unreachable pairs
-    * contribute 0 (the point of harmonic over closeness).
-    *
-    * Scale shape: one multi-source BFS — per round the (s, v) frontier
-    * joins the pinned src-partitioned edge frame and anti-joins the
-    * visited set; memory is O(sources × reached), the same documented
-    * bound as [[betweenness]]; throws at the cap (distances past it
-    * would silently vanish from the sum). The whole-graph scale path is
+    * contribute 0 (the point of harmonic over closeness). One
+    * [[bfsLevels]] pass; the whole-graph scale path is
     * [[harmonicCentralityHll]]. */
   def harmonicCentrality(graph: PropertyGraph, sources: DataFrame,
       relTypes: Seq[String] = Seq.empty, directed: Boolean = false,
       maxIterations: Int = 50): DataFrame = {
+    val scores = bfsLevels(graph, sources, relTypes, directed, maxIterations,
+        "harmonicCentrality")
+      .filter(col("s") =!= col("v"))
+      .groupBy(col("v").as("id"))
+      .agg(sum(lit(1.0) / col("d")).as("harmonic"))
+    nodeIds(graph).join(scores, Seq("id"), "left_outer")
+      .select(col("id"), coalesce(col("harmonic"), lit(0.0)).as("harmonic"))
+  }
+
+  /** Multi-source BFS from `sources` over the graph's loop-free edges
+    * (undirected unless `directed`); returns every (s, v, d) with d the
+    * hop distance from source s to v. Per round the last level joins the
+    * pinned hash(src) edge frame, dedups (s, v) and anti-joins the visited
+    * set — a LAZY union of the pinned levels, so no per-round visited
+    * checkpoint. Memory is O(sources × reached), the [[betweenness]] bound;
+    * the cap throws (distances past it would silently vanish). */
+  private def bfsLevels(graph: PropertyGraph, sources: DataFrame,
+      relTypes: Seq[String], directed: Boolean, maxIterations: Int,
+      algo: String): DataFrame = {
     val e0 = validated(edges(graph, relTypes), graph)
       .filter(col("src") =!= col("dst"))
-    val base = e0.select(col("src"), col("dst"))
-    val sym = if (directed) base
-      else base.unionByName(base.select(col("dst").as("src"),
-        col("src").as("dst")))
-    // One exchange, not two (r14, guide §2.4): the old shape deduped the
-    // directed base (one full shuffle) and re-shuffled the symmetrized
-    // union on src; hash(src) satisfies the (src, dst) dedup clustering,
-    // so one repartition + in-place dedup does both — and dedups ACROSS
-    // the union arms too (harmless: every BFS level dedups (s, v), so
-    // edge multiplicity never reaches the scores). Pin.keyed (r15) keeps
-    // the hash(src) layout visible so rounds skip the edge re-exchange.
-    val e = Pin.keyed(sym, Seq("src"), _.dropDuplicates(Seq("src", "dst")))
-    // visited is a LAZY union of the pinned per-depth levels (no per-round
-    // visited checkpoint write — the anti-join re-reads cached level
-    // blocks), and the convergence count is the 1-row aggregate that
-    // materializes the round's pin: one driver-visible action per round
-    // (the betweenness/sssp r13-r14 fold, VERDICT r13 #1).
+    // One exchange: hash(src) satisfies the (src, dst) dedup clustering,
+    // which also dedups ACROSS the union arms (harmless: every level
+    // dedups (s, v), so edge multiplicity never reaches the scores).
+    val e = Pin.keyed(symmetrized(e0, directed), Seq("src"),
+      _.dropDuplicates(Seq("src", "dst")))
     var levels = Vector(Pin(sources.select(col("id").cast(LongType).as("s"))
       .distinct().select(col("s"), col("s").as("v"), lit(0).as("d"))))
-    var d = 0
-    var go = true
-    while (go && d < maxIterations) {
-      d += 1
+    untilConverged(maxIterations,
+        s"$algo did not finish within $maxIterations BFS rounds " +
+          "(raise maxIterations)") { d =>
       val frontier = levels.last
       val visited = levels.map(_.select(col("s"), col("v")))
         .reduce(_.unionByName(_))
       val next = Pin(e.join(frontier.hint("shuffle_hash"),
           e("src") === frontier("v"))
         .select(col("s"), col("dst").as("v"), lit(d).as("d"))
-        // dedup on (s, v) only — d is a per-level constant, so this is
-        // the old full-row distinct, but the dedup's hash(s, v) output
-        // partitioning now feeds the anti-join probe side exchange-free;
-        // the visited side is the hash build (no per-round sort of
-        // either side — r14, guide §2.4/§3.1).
+        // dedup on (s, v) only — d is a per-level constant — so the
+        // dedup's hash(s, v) output feeds the anti-join probe side
+        // exchange-free; the visited side is the hash build.
         .dropDuplicates(Seq("s", "v"))
         .join(visited.hint("shuffle_hash"), Seq("s", "v"), "left_anti"))
-      if (next.agg(count(lit(1))).head().getLong(0) == 0L) go = false
-      else levels = levels :+ next
+      val empty = next.agg(count(lit(1))).head().getLong(0) == 0L
+      if (!empty) levels :+= next
+      empty
     }
-    if (go) throw new IllegalStateException(
-      s"harmonicCentrality did not finish within $maxIterations BFS " +
-        "rounds (raise maxIterations)")
-    val visited = levels.reduce(_.unionByName(_))
-    val scores = visited.filter(col("s") =!= col("v"))
-      .groupBy(col("v").as("id"))
-      .agg(sum(lit(1.0) / col("d")).as("harmonic"))
-    nodeIds(graph).join(scores, Seq("id"), "left_outer")
-      .select(col("id"), coalesce(col("harmonic"), lit(0.0)).as("harmonic"))
+    levels.reduce(_.unionByName(_))
+  }
+
+  /** HyperBall neighbour frame: [[neighborPairs]] deduped in the one hash(v)
+    * exchange every hop's sketch join consumes. Width stays at
+    * defaultParallelism: the per-hop sketch unions are CPU-bound, so the
+    * pin's width SETS the loop's parallelism — byte-derived sizing
+    * measured 6.3 -> 11.1 s by running the merges 2-3 wide on 32 cores. */
+  private def hllNeighbors(edges0: DataFrame): DataFrame =
+    Pin.keyed(neighborPairs(edges0), Seq("v"), _.dropDuplicates(Seq("u", "v")),
+      width = Some(edges0.sparkSession.sparkContext.defaultParallelism))
+
+  /** Each node's radius-0 ball sketch: (id, sk). */
+  private def hllSelfSketches(sym: DataFrame, lgK: Int): DataFrame =
+    sym.select(col("u").as("id")).groupBy(col("id"))
+      .agg(hll_sketch_agg(col("id"), lgK).as("sk"))
+
+  /** One HyperBall hop: every node's sketch `sk` absorbs the union of its
+    * neighbours' sketches (radius + 1). The state's other columns ride
+    * along unchanged. */
+  private def hllHop(sym: DataFrame, state: DataFrame): DataFrame = {
+    val contrib = sym.join(state, col("v") === col("id"))
+      .groupBy(col("u"))
+      .agg(hll_union_agg(col("sk"), allowDifferentLgConfigK = true).as("_nsk"))
+    val merged = when(col("_nsk").isNull, col("sk"))
+      .otherwise(hll_union(col("sk"), col("_nsk"), allowDifferentLgConfigK = true))
+    state.join(contrib, state("id") === contrib("u"), "left")
+      .select(col("id") +: merged.as("sk") +:
+        state.columns.filterNot(Set("id", "sk")).map(col): _*)
   }
 
   /** Harmonic centrality ESTIMATES for every node via HyperBall
@@ -1363,99 +1226,50 @@ object GraphAlgorithms {
     * H(v) ≈ Σ_h (|B(v,h)| − |B(v,h−1)|)/h from the per-hop HLL ball
     * sizes, iterated until the ball sizes stop changing (sketches are
     * monotone, so the per-node estimates converge exactly in diameter
-    * hops; the cap THROWS). O(2^lgK) state per node, never materializes
-    * distances — the 100-TB formulation. */
+    * hops). O(2^lgK) state per node, never materializes distances — the
+    * 100-TB formulation. */
   def harmonicCentralityHll(edges0: DataFrame, maxIterations: Int = 50,
       lgK: Int = 12): DataFrame = {
-    val spark = edges0.sparkSession
-    // One exchange, not two (r14, guide §2.4): the neighbor dedup rides
-    // the hash(v) repartition every hop's sketch join consumes (hash(v)
-    // satisfies the (u, v) dedup clustering).
-    val sym = {
-      val e = edges0.filter(col("src") =!= col("dst"))
-      // Pin.keyed (r15): hash(v) layout stays visible, so every hop's
-      // sketch join consumes it instead of re-exchanging the edge frame.
-      // Width stays at defaultParallelism (the deliberate r14 choice):
-      // the per-hop sketch unions are CPU-bound, and the pin's width now
-      // SETS the loop's parallelism — byte-derived sizing measured
-      // 6.3 -> 11.1 s here by running the merges 2-3 wide on 32 cores.
-      Pin.keyed(e.select(col("src").as("u"), col("dst").as("v"))
-        .unionByName(e.select(col("dst").as("u"), col("src").as("v"))),
-        Seq("v"), _.dropDuplicates(Seq("u", "v")),
-        width = Some(spark.sparkContext.defaultParallelism))
-    }
-    var state = Pin {
-      val init = sym.select(col("u").as("id"))
-        .groupBy(col("id"))
-        .agg(hll_sketch_agg(col("id"), lgK).as("sk"))
-      init.select(col("id"), col("sk"),
-        hll_sketch_estimate(col("sk")).cast(DoubleType).as("est"),
-        lit(0.0).as("acc"))
-    }
+    val sym = hllNeighbors(edges0)
+    val est = hll_sketch_estimate(col("sk")).cast(DoubleType)
+    var state = Pin(hllSelfSketches(sym, lgK)
+      .select(col("id"), col("sk"), est.as("est"), lit(0.0).as("acc")))
     def totalEst(df: DataFrame): Double =
       df.agg(sum(col("est"))).head().getDouble(0)
     var prevTotal = totalEst(state)
-    var h = 0
-    var converged = false
-    while (!converged && h < maxIterations) {
-      h += 1
-      val contrib = sym.join(state, col("v") === col("id"))
-        .groupBy(col("u"))
-        .agg(hll_union_agg(col("sk"), allowDifferentLgConfigK = true)
-          .as("_nsk"))
-      state = Pin(state.join(contrib, state("id") === contrib("u"), "left")
-        .select(col("id"),
-          when(col("_nsk").isNull, col("sk"))
-            .otherwise(hll_union(col("sk"), col("_nsk"),
-              allowDifferentLgConfigK = true)).as("sk"),
-          col("est").as("_pe"), col("acc"))
-        .select(col("id"), col("sk"),
-          hll_sketch_estimate(col("sk")).cast(DoubleType).as("est"),
-          (col("acc") + greatest(
-            hll_sketch_estimate(col("sk")).cast(DoubleType) - col("_pe"),
-            lit(0.0)) / h).as("acc")))
-      val t = totalEst(state) // doubles as the round's pin action
-      converged = t == prevTotal // identical sketches -> identical doubles
+    untilConverged(maxIterations, s"harmonicCentralityHll did not converge " +
+        s"within $maxIterations hops (raise maxIterations)") { h =>
+      // `est` on the right of each `acc` term is the previous hop's.
+      state = Pin(hllHop(sym, state).select(col("id"), col("sk"), est.as("est"),
+        (col("acc") + greatest(est - col("est"), lit(0.0)) / h).as("acc")))
+      val t = totalEst(state)
+      val stable = t == prevTotal // identical sketches -> identical doubles
       prevTotal = t
+      stable
     }
-    if (!converged) throw new IllegalStateException(
-      s"harmonicCentralityHll did not converge within $maxIterations " +
-        "hops (raise maxIterations)")
     state.select(col("id"), col("acc").as("harmonic_est"))
   }
 
+  /** HyperBall-style approximate neighborhood function (Boldi & Vigna,
+    * WWW'14 "HyperBall: a fast sketch-based diameter tool"; the reference
+    * engine has nothing comparable — this is the 100-TB formulation):
+    * every node carries an HLL sketch of its h-hop ball, and one round of
+    * sketch-union along edges grows the radius by one. Returns
+    * (id, ball_est) — the estimated |B(v, maxHops)|, self included.
+    *
+    * Scale shape: each round shuffles only the per-node sketch frame
+    * (sketches stay tiny for small balls — DataSketches HLL is sparse
+    * until ~2^lgK distinct items); per round: one join + one
+    * hll_union_agg groupBy + one merge join. Nothing ever materializes a
+    * pair set, which is the whole point vs [[neighborhoodSizes2]] — ball
+    * counting over a 100-TB edge list is feasible exactly because the
+    * state per node is O(2^lgK) bytes regardless of ball size. Estimates
+    * are deterministic (DataSketches HLL has no run-time randomness), so
+    * the accuracy gate in the registered query is stable. */
   def neighborhoodHll(edges0: DataFrame, maxHops: Int, lgK: Int = 12): DataFrame = {
-    val spark = edges0.sparkSession
-    // One exchange, not two (r14, guide §2.4): the neighbor dedup rides
-    // the hash(v) repartition every hop's sketch join consumes (hash(v)
-    // satisfies the (u, v) dedup clustering).
-    val sym = {
-      val e = edges0.filter(col("src") =!= col("dst"))
-      // Pin.keyed (r15): hash(v) layout stays visible, so every hop's
-      // sketch join consumes it instead of re-exchanging the edge frame.
-      // Width stays at defaultParallelism (the deliberate r14 choice):
-      // the per-hop sketch unions are CPU-bound, and the pin's width now
-      // SETS the loop's parallelism — byte-derived sizing measured
-      // 6.3 -> 11.1 s here by running the merges 2-3 wide on 32 cores.
-      Pin.keyed(e.select(col("src").as("u"), col("dst").as("v"))
-        .unionByName(e.select(col("dst").as("u"), col("src").as("v"))),
-        Seq("v"), _.dropDuplicates(Seq("u", "v")),
-        width = Some(spark.sparkContext.defaultParallelism))
-    }
-    var sk = Pin(sym.select(col("u").as("id"))
-      .groupBy(col("id"))
-      .agg(hll_sketch_agg(col("id"), lgK).as("sk")))
-    var hop = 0
-    while (hop < maxHops) {
-      val contrib = sym.join(sk, col("v") === col("id"))
-        .groupBy(col("u"))
-        .agg(hll_union_agg(col("sk"), allowDifferentLgConfigK = true).as("_nsk"))
-      sk = Pin(sk.join(contrib, sk("id") === contrib("u"), "left")
-        .select(col("id"),
-          when(col("_nsk").isNull, col("sk"))
-            .otherwise(hll_union(col("sk"), col("_nsk"), allowDifferentLgConfigK = true)).as("sk")))
-      hop += 1
-    }
+    val sym = hllNeighbors(edges0)
+    var sk = Pin(hllSelfSketches(sym, lgK))
+    for (_ <- 1 to maxHops) sk = Pin(hllHop(sym, sk))
     sk.select(col("id"), hll_sketch_estimate(col("sk")).as("ball_est"))
   }
 
@@ -1539,8 +1353,7 @@ object GraphAlgorithms {
       topK, degreeCutoff, similarityCutoff, metric = metric)
 
   /** Exact closeness centrality from a source set (GDS closeness parity;
-    * same multi-source BFS loop as [[harmonicCentrality]] — frontier
-    * pinned per level, work proportional to the visited set). For node v
+    * the same [[bfsLevels]] pass as [[harmonicCentrality]]). For node v
     * reached by r sources at total distance S: closeness = r / S;
     * with `wassermanFaust` the component-size correction
     * (r / (n−1)) · (r / S) (Wasserman & Faust 1994) so scores stay
@@ -1548,49 +1361,8 @@ object GraphAlgorithms {
   def closenessCentrality(graph: PropertyGraph, sources: DataFrame,
       relTypes: Seq[String] = Seq.empty, directed: Boolean = false,
       wassermanFaust: Boolean = false, maxIterations: Int = 50): DataFrame = {
-    val e0 = validated(edges(graph, relTypes), graph)
-      .filter(col("src") =!= col("dst"))
-    val base = e0.select(col("src"), col("dst"))
-    val sym = if (directed) base
-      else base.unionByName(base.select(col("dst").as("src"),
-        col("src").as("dst")))
-    // One exchange, not two (r14, guide §2.4): the old shape deduped the
-    // directed base (one full shuffle) and re-shuffled the symmetrized
-    // union on src; hash(src) satisfies the (src, dst) dedup clustering,
-    // so one repartition + in-place dedup does both — and dedups ACROSS
-    // the union arms too (harmless: every BFS level dedups (s, v), so
-    // edge multiplicity never reaches the scores). Pin.keyed (r15) keeps
-    // the hash(src) layout visible so rounds skip the edge re-exchange.
-    val e = Pin.keyed(sym, Seq("src"), _.dropDuplicates(Seq("src", "dst")))
-    // Same per-round job fold as [[harmonicCentrality]]: lazy visited
-    // union over pinned levels + convergence folded into the pin-
-    // materializing aggregate (VERDICT r13 #1).
-    var levels = Vector(Pin(sources.select(col("id").cast(LongType).as("s"))
-      .distinct().select(col("s"), col("s").as("v"), lit(0).as("d"))))
-    var d = 0
-    var go = true
-    while (go && d < maxIterations) {
-      d += 1
-      val frontier = levels.last
-      val visited = levels.map(_.select(col("s"), col("v")))
-        .reduce(_.unionByName(_))
-      val next = Pin(e.join(frontier.hint("shuffle_hash"),
-          e("src") === frontier("v"))
-        .select(col("s"), col("dst").as("v"), lit(d).as("d"))
-        // dedup on (s, v) only — d is a per-level constant, so this is
-        // the old full-row distinct, but the dedup's hash(s, v) output
-        // partitioning now feeds the anti-join probe side exchange-free;
-        // the visited side is the hash build (no per-round sort of
-        // either side — r14, guide §2.4/§3.1).
-        .dropDuplicates(Seq("s", "v"))
-        .join(visited.hint("shuffle_hash"), Seq("s", "v"), "left_anti"))
-      if (next.agg(count(lit(1))).head().getLong(0) == 0L) go = false
-      else levels = levels :+ next
-    }
-    if (go) throw new IllegalStateException(
-      s"closenessCentrality did not finish within $maxIterations BFS " +
-        "rounds (raise maxIterations)")
-    val visited = levels.reduce(_.unionByName(_))
+    val visited = bfsLevels(graph, sources, relTypes, directed, maxIterations,
+      "closenessCentrality")
     val n = nodeIds(graph).count()
     val agg = visited.filter(col("s") =!= col("v"))
       .groupBy(col("v").as("id"))
@@ -1605,11 +1377,8 @@ object GraphAlgorithms {
   }
 
   /** Eigenvector centrality by power iteration (GDS eigenvector parity):
-    * x ← A'x / ‖A'x‖₂ from a uniform start — each round one src-keyed
-    * join + one dst aggregation + one 1-row norm aggregate (which also
-    * materializes the round's lazy pin: ONE job per round, the pageRank
-    * pattern). The edge list is pinned pre-partitioned on src once, so no
-    * iteration re-shuffles it. Nodes with no in-edges (of the requested
+    * x ← A'x / ‖A'x‖₂ from a uniform start — [[rankRounds]] with the L2
+    * norm as the round's scalar. Nodes with no in-edges (of the requested
     * types) read 0 — returned analytically, never iterated. Fixed
     * iteration count (deterministic, oracle-replayable); GDS's tolerance
     * stop is a caller-side loop away.
@@ -1621,36 +1390,19 @@ object GraphAlgorithms {
   def eigenvectorCentrality(graph: PropertyGraph, iterations: Int = 3,
       relTypes: Seq[String] = Seq.empty,
       directed: Boolean = true): DataFrame = {
-    val e0 = validated(edges(graph, relTypes), graph)
-      .select(col("src"), col("dst"))
-    val e = if (directed) e0
-      else e0.unionByName(
-        e0.select(col("dst").as("src"), col("src").as("dst")))
-    // Pin.keyed (r15): hash(src)/hash(id) layouts stay visible through the
-    // pins, so no power-iteration round re-exchanges the edge frame.
-    val links = Pin.keyed(e, Seq("src"))
-    val connected = Pin.keyed(e.select(col("src").as("id"))
-      .unionByName(e.select(col("dst").as("id"))), Seq("id"), _.distinct())
-    var x = connected.select(col("id"), lit(1.0).as("score"))
-    for (_ <- 1 to iterations) {
-      val contrib = links.join(x.hint("shuffle_hash"),
-          links("src") === x("id"))
-        .groupBy(links("dst").as("id"))
-        .agg(sum(col("score")).as("raw"))
-      val received = Pin(connected.join(contrib, Seq("id"), "left_outer")
-        .select(col("id"), coalesce(col("raw"), lit(0.0)).as("raw")))
-      // L2 norm materializes the pin — the round's single job.
-      val norm = math.sqrt(
-        received.agg(sum(col("raw") * col("raw"))).head().getDouble(0))
-      // A graph with edges always moves mass somewhere, but guard the
-      // all-zero corner (e.g. a single self-loop filtered upstream).
-      val denom = if (norm == 0.0) 1.0 else norm
-      x = received.select(col("id"), (col("raw") / lit(denom)).as("score"))
+    val e = symmetrized(validated(edges(graph, relTypes), graph), directed)
+    val connected = connectedIds(e)
+    val x = rankRounds(Pin.keyed(e, Seq("src")), connected,
+        connected.select(col("id"), lit(1.0).as("score")), iterations,
+        col("score"), Some(sum(col("contrib") * col("contrib")))) {
+      (received, sumSq) =>
+        // A graph with edges always moves mass somewhere, but guard the
+        // all-zero corner (e.g. a single self-loop filtered upstream).
+        val norm = math.sqrt(sumSq)
+        received.select(col("id"),
+          (col("contrib") / lit(if (norm == 0.0) 1.0 else norm)).as("score"))
     }
-    val isolated = nodeIds(graph)
-      .join(x.select(col("id")), Seq("id"), "left_anti")
-      .select(col("id"), lit(0.0).as("score"))
-    x.unionByName(isolated)
+    withIsolated(graph, x, lit(0.0))
   }
 
   /** Louvain community detection (GDS louvain parity), DETERMINISTIC:
@@ -1812,7 +1564,7 @@ object GraphAlgorithms {
     // State: one row per live walk. walk_id = start·walksPerStart + w.
     var state = starts.select(col("id").cast(LongType).as("start"))
       .distinct()
-      .crossJoin(spark(edges0).range(walksPerStart).select(col("id").as("_w")))
+      .crossJoin(edges0.sparkSession.range(walksPerStart).select(col("id").as("_w")))
       .select((col("start") * walksPerStart + col("_w")).as("walk_id"),
         col("start"), col("start").as("cur"))
     var out = state.select(col("walk_id"), col("start"),
@@ -1840,73 +1592,41 @@ object GraphAlgorithms {
     * GDS constant is unreachable offline (documented, oracle-replayed):
     * avgOutDeg = |E| / |connected nodes|, no dangling-mass
     * redistribution (mass is NOT conserved in this recurrence — the
-    * normalizer is deliberately too large), initial rank 1.0, isolated
-    * nodes closed-form at `1 - damping`. Scale shape = [[pageRank]]:
-    * links pinned pre-partitioned on src, one keyed join + aggregation
-    * per round, isolated nodes never iterate. */
+    * normalizer is deliberately too large, so the round has no scalar and
+    * no job), initial rank 1.0, isolated nodes closed-form at
+    * `1 - damping`. Scale shape = [[pageRank]]. */
   def articleRank(graph: PropertyGraph, iterations: Int = 10,
       damping: Double = 0.85, relTypes: Seq[String] = Seq.empty): DataFrame = {
-    // One src exchange feeds the degree aggregation AND the links join on
-    // both sides (r14, guide §2.4) — the old shape shuffled the edge frame
-    // twice (groupBy input + join left).
     val e = validated(edges(graph, relTypes), graph)
-    // Pin.keyed (r15): one explicit hash(src) exchange feeds the degree
-    // aggregation and both join sides, and the layout claim survives the
-    // pin so no round re-exchanges links (see pageRank).
-    val links = Pin.keyed(e, Seq("src"), ep =>
-      ep.join(ep.groupBy(col("src")).agg(count(lit(1)).as("deg")), "src"))
-    val connected = Pin.keyed(e.select(col("src").as("id"))
-      .unionByName(e.select(col("dst").as("id"))), Seq("id"), _.distinct())
+    val links = normLinks(e, count(lit(1)).as("deg"))
+    val connected = connectedIds(e)
     val nConn = connected.count()
     val avgDeg = if (nConn == 0L) 0.0 else e.count().toDouble / nConn
-    var ranks = connected.select(col("id"), lit(1.0).as("rank"))
-    for (_ <- 1 to iterations) {
-      val contribs = links.join(ranks.hint("shuffle_hash"),
-          links("src") === ranks("id"))
-        .select(col("dst").as("id"),
-          (col("rank") / (col("deg") + lit(avgDeg))).as("c"))
-        .groupBy(col("id")).agg(sum(col("c")).as("contrib"))
-      ranks = Pin(connected.join(contribs, Seq("id"), "left_outer")
-        .select(col("id"), (lit(1.0 - damping) +
-          lit(damping) * coalesce(col("contrib"), lit(0.0))).as("rank")))
+    val ranks = rankRounds(links, connected,
+        connected.select(col("id"), lit(1.0).as("rank")), iterations,
+        col("rank") / (col("deg") + lit(avgDeg)), None) { (received, _) =>
+      received.select(col("id"),
+        (lit(1.0 - damping) + lit(damping) * col("contrib")).as("rank"))
     }
-    val isolated = nodeIds(graph)
-      .join(ranks.select(col("id")), Seq("id"), "left_anti")
-      .select(col("id"), lit(1.0 - damping).as("rank"))
-    ranks.unionByName(isolated)
+    withIsolated(graph, ranks, lit(1.0 - damping))
   }
 
   /** Global transitivity (a.k.a. global clustering coefficient):
     * 3·triangles / wedges over the simple undirected graph, where wedges
-    * = Σ_v deg(v)·(deg(v)−1)/2. Triangles reuse the degree-ordered
-    * orientation of [[triangleCountEdges]]; the wedge count is one
-    * degree aggregation — both exact integers, so the one double
-    * division is bit-deterministic and the oracle replays it without
-    * rounding. Returns 1 row (triangles, wedges, transitivity). */
+    * = Σ_v deg(v)·(deg(v)−1)/2. Triangles are [[closedWedges]]; the wedge
+    * count is one degree aggregation — both exact integers, so the one
+    * double division is bit-deterministic and the oracle replays it
+    * without rounding. Returns 1 row (triangles, wedges, transitivity). */
   def transitivityEdges(edges0: DataFrame): DataFrame = {
-    // Dedup rides the hash(a) repartition (one exchange, not two — r14,
-    // guide §2.4); Pin.keyed (r15) keeps the hash(a) layout visible for
-    // orientByDegree's a-side join and the closing semi-join.
-    val canon = Pin.keyed(edges0
-      .filter(col("src") =!= col("dst"))
-      .select(least(col("src"), col("dst")).as("a"),
-        greatest(col("src"), col("dst")).as("b")),
-      Seq("a"), _.dropDuplicates(Seq("a", "b")))
+    val canon = canonEdges(edges0)
     // Σ deg·(deg−1) stays an exact LONG end to end; the halving is an
     // integer `div` (the product is always even), never a double.
     val wedges = canon.select(explode(array(col("a"), col("b"))).as("id"))
       .groupBy(col("id")).agg(count(lit(1)).as("deg"))
       .agg(sum(col("deg") * (col("deg") - 1)).as("w2"))
       .select(expr("w2 div 2").as("wedges"))
-    val m = canon.count() // materializes the pin; sizes the bloom (r15)
-    val tri = {
-      val oriented = orientByDegree(canon)
-      wedgeBloomPrefilter( // before the wedge exchange (r15, guide §3.2)
-          wedgeJoin(oriented).select(col("x"), col("y")), canon, m)
-        .join(canon.hint("shuffle_hash"),
-          col("x") === col("a") && col("y") === col("b"), "left_semi")
-        .agg(count(lit(1)).as("triangles"))
-    }
+    val tri = closedWedges(canon, canon.count())
+      .agg(count(lit(1)).as("triangles"))
     tri.crossJoin(wedges) // both are 1-row aggregates: a broadcast join
       .select(col("triangles"), col("wedges").cast(LongType).as("wedges"),
         when(col("wedges") === 0, lit(0.0))
@@ -1928,12 +1648,9 @@ object GraphAlgorithms {
     * the final per-community doubles, so the oracle replays to a rounded
     * match. Returns 1 row (m, communities, modularity). */
   def modularityEdges(edges0: DataFrame, assign: DataFrame): DataFrame = {
-    // Single-exchange canonicalization (r14, guide §2.4): hash(a) rides
-    // into the a-side assignment join below.
-    val canon = edges0
-      .filter(col("src") =!= col("dst"))
-      .select(least(col("src"), col("dst")).as("a"),
-        greatest(col("src"), col("dst")).as("b"))
+    // Single-exchange canonicalization: hash(a) rides into the a-side
+    // assignment join below.
+    val canon = canonPairs(edges0)
       .repartition(col("a")).dropDuplicates(Seq("a", "b"))
     val tagged = Pin(canon
       .join(assign.select(col("id").as("a"), col("community").as("ca")), Seq("a"))
@@ -1952,6 +1669,4 @@ object GraphAlgorithms {
         round(sum(col("q")), 8).as("modularity"))
       .select(lit(m.toLong).as("m"), col("communities"), col("modularity"))
   }
-
-  private def spark(df: DataFrame): SparkSession = df.sparkSession
 }

@@ -93,15 +93,6 @@ object Pin {
     }
   }
 
-  /** Eager variant for per-iteration loop state that the caller unpersists
-    * once the next round is materialized. */
-  def eager(df: DataFrame): DataFrame =
-    mode(df) match {
-      case "persist" =>
-        val p = df.persist(StorageLevel.MEMORY_AND_DISK); p.count(); p
-      case _ => df.localCheckpoint(eager = true)
-    }
-
   private def mode(df: DataFrame): String = {
     val spark = df.sparkSession
     spark.conf.getOption("spark.graft.pin").getOrElse {

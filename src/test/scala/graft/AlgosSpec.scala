@@ -93,6 +93,14 @@ class AlgosSpec extends SparkTestBase {
       val comps = GraphAlgorithms.connectedComponents(g).collect()
         .map(_.getLong(0) & 0xFFFFFFFFL).toSet
       assert(comps === Set(1L, 2L, 3L))
+      val wpr = GraphAlgorithms.pageRankWeighted(g, Map("E" -> 2.0),
+          iterations = 3).collect()
+        .map(r => (r.getLong(0) & 0xFFFFFFFFL, r.getDouble(1))).toMap
+      assert(wpr.keySet === Set(1L, 2L, 3L))
+      assert(math.abs(wpr.values.sum - 3.0) < 1e-6, s"ranks: $wpr")
+      val dist = GraphAlgorithms.sssp(g, Seq(1L).toDF("id"), Map("E" -> 1.0))
+        .collect().map(_.getLong(0) & 0xFFFFFFFFL).toSet
+      assert(dist === Set(1L, 2L))
     } finally spark.conf.unset("spark.graft.algo.validateNodeIds")
   }
 
@@ -1182,5 +1190,102 @@ class AlgosSpec extends SparkTestBase {
     assert(row.getLong(0) === 1L)      // only edge 1-2 has both ends assigned
     assert(row.getLong(1) === 1L)
     assert(row.getDouble(2) === 0.0)   // 1/1 - (2/2)^2
+  }
+
+  // ---- Build-time job counts. Each iterative algorithm promises a fixed
+  // number of driver-visible jobs per round (one pin + one scalar fold);
+  // a change to any loop's round structure moves these counts.
+
+  /** K4 {1,2,3,4} with a tail 4-5-6-7 and an isolated node 8. */
+  private def jobGraph: PropertyGraph = {
+    val nodes = (1L to 8L).toDF("id")
+    val edges = Seq((1L, 2L), (1L, 3L), (1L, 4L), (2L, 3L), (2L, 4L),
+        (3L, 4L), (4L, 5L), (5L, 6L), (6L, 7L)).zipWithIndex
+      .map { case ((s, t), i) => (100L + i, s, t) }.toDF("id", "src", "tgt")
+    PropertyGraph(
+      Seq(NodeTableDef(Set("V"), nodes, "id", Map.empty, "v")),
+      Seq(RelTableDef("E", edges, "id", "src", "tgt", Map.empty, "e", "v", "v")))
+  }
+
+  /** Jobs started while `build` constructs its DataFrame (no final
+    * action), counted by job group after the listener bus is drained. */
+  private def buildJobs(build: => org.apache.spark.sql.DataFrame): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val group = "algos-build-jobs"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties)
+            .exists(_.getProperty("spark.jobGroup.id") == group))
+          jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "build", interruptOnCancel = false)
+    try {
+      build
+      org.apache.spark.GraftTestBridge.drainListenerBus(sc)
+      jobs.get
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  test("build-time job counts of the iterative loops stay fixed") {
+    val src = Seq(1L).toDF("id")
+    val e = GraphAlgorithms.edges(jobGraph)
+    // A fresh graph per call (its node-id frame caches after first use);
+    // fixed shuffle width (the k-truss count moves with it).
+    val counts = withSQLConf("spark.sql.shuffle.partitions" -> "4") {
+      Seq(
+        "pageRank" -> buildJobs(
+          GraphAlgorithms.pageRank(jobGraph, iterations = 3)),
+        "personalizedPageRank" -> buildJobs(
+          GraphAlgorithms.personalizedPageRank(jobGraph, src, iterations = 3)),
+        "pageRankWeighted" -> buildJobs(
+          GraphAlgorithms.pageRankWeighted(jobGraph, Map("E" -> 1.0),
+            iterations = 3)),
+        "articleRank" -> buildJobs(
+          GraphAlgorithms.articleRank(jobGraph, iterations = 3)),
+        "eigenvectorCentrality" -> buildJobs(
+          GraphAlgorithms.eigenvectorCentrality(jobGraph, iterations = 3)),
+        "sssp" -> buildJobs(
+          GraphAlgorithms.sssp(jobGraph, src, Map("E" -> 1.0))),
+        "harmonicCentrality" -> buildJobs(
+          GraphAlgorithms.harmonicCentrality(jobGraph, src)),
+        "closenessCentrality" -> buildJobs(
+          GraphAlgorithms.closenessCentrality(jobGraph, src)),
+        "triangleCountEdges" -> buildJobs(GraphAlgorithms.triangleCountEdges(e)),
+        "kTrussEdges" -> buildJobs(GraphAlgorithms.kTrussEdges(e, 4)))
+    }
+    assert(counts === Seq(
+      "pageRank" -> 24, "personalizedPageRank" -> 25,
+      "pageRankWeighted" -> 24, "articleRank" -> 19,
+      "eigenvectorCentrality" -> 20, "sssp" -> 28,
+      "harmonicCentrality" -> 27, "closenessCentrality" -> 29,
+      "triangleCountEdges" -> 6, "kTrussEdges" -> 26))
+  }
+
+  test("every throwing loop fails at a too-small cap instead of truncating") {
+    val path = (1L to 5L).map(i => (i, i + 1)).toDF("src", "dst")
+    val pathGraph = sccGraph((1L to 5L).map(i => (i, i + 1)), 6)
+    val trussChain = Seq((1L, 2L), (1L, 3L), (2L, 3L), (2L, 4L), (3L, 4L))
+      .toDF("src", "dst")
+    val src = Seq(1L).toDF("id")
+    val capped = Seq[(String, () => org.apache.spark.sql.DataFrame)](
+      "kTrussEdges" -> (() =>
+        GraphAlgorithms.kTrussEdges(trussChain, 4, maxIterations = 1)),
+      "betweenness" -> (() =>
+        GraphAlgorithms.betweenness(path, src, maxDepth = 1)),
+      "closenessCentrality" -> (() =>
+        GraphAlgorithms.closenessCentrality(pathGraph, src, maxIterations = 1)),
+      "harmonicCentralityHll" -> (() =>
+        GraphAlgorithms.harmonicCentralityHll(path, maxIterations = 1)),
+      "scc inner rounds" -> (() => GraphAlgorithms.stronglyConnectedComponents(
+        pathGraph, maxInnerRounds = 1)))
+    capped.foreach { case (name, run) =>
+      withClue(s"$name: ")(intercept[IllegalStateException](run().collect()))
+    }
   }
 }

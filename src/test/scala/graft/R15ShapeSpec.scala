@@ -45,7 +45,26 @@ class R15ShapeSpec extends SparkTestBase {
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     }
     assert(truss("0") === truss(s"${Long.MaxValue}"))
+    // The forced-on side must really take the bloom path in the peeling
+    // round (an explicit minItems replaces the per-round 1M floor).
+    def roundProbesBloom(minItems: String) = withSQLConf(
+      "spark.graft.bloom.minItems" -> minItems,
+      "spark.sql.adaptive.enabled" -> "false") {
+      val canon = e.filter(col("src") =!= col("dst"))
+        .select(least(col("src"), col("dst")).as("a"),
+          greatest(col("src"), col("dst")).as("b"))
+        .dropDuplicates(Seq("a", "b"))
+      planHasBloom(GraphAlgorithms.edgeSupport(canon, canon.count())
+        .queryExecution.executedPlan)
+    }
+    assert(roundProbesBloom("0"), "forced-on k-truss round lacks might_contain")
+    assert(!roundProbesBloom(s"${Long.MaxValue}"))
   }
+
+  private def planHasBloom(p: org.apache.spark.sql.execution.SparkPlan): Boolean =
+    p.expressions.exists(_.exists(
+      _.isInstanceOf[org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain])) ||
+      p.children.exists(planHasBloom)
 
   // ---- Pin.keyed round-body pins (VERDICT r14 #7): the per-round join
   // against a keyed pin must consume the claimed hash layout — no exchange
